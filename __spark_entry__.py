@@ -11,13 +11,16 @@ only adapts the registry to the driver's interface.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from dpu_olap_spark import session as _session
 from dpu_olap_spark import registry as _registry
@@ -39,198 +42,36 @@ def _wrap(build: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSes
     return run
 
 
-# Queries with a green driver CORRECTNESS row in a previous round.  The
-# driver verifies only a window from the FRONT of the queries() dict
-# (r1 artifact stopped at entry 50 of 90), so not-yet-verified queries
-# are emitted first and already-green ones rotate to the back, ordered
-# oldest-verified-round first so stale rows get re-checked.  Update
-# these sets each round from CORRECTNESS_r{N}.json.
-_VERIFIED_R14 = (
-    # CORRECTNESS_r14.json — the 20 rows NOT re-checked since r14 (the
-    # r14 window's youngest tail); the other 30 r14 rows re-checked in
-    # r18 and moved to _VERIFIED_R18.  _VERIFIED_R13 dissolved (all 15
-    # of its remaining rows re-checked green in r18).  These are now
-    # the repo's stalest rows and re-check right behind the r19 leads.
-    "mm_resize", "knn_bruteforce", "ann_lsh", "vector_stats",
-    "embedding_neardup", "ivf_assign", "ivf_search", "multi_join_agg",
-    "funnel", "statestore_session_read", "stream_session_append",
-    "stream_left_outer_join", "stream_full_outer_join", "joinstate_read",
-    "rocksdb_state_agg", "statestore_changefeed", "statestore_timetravel",
-    "pystream_scan", "pysink_write", "sink_zorder",
-)
-_VERIFIED_R15 = (
-    # CORRECTNESS_r15.json — 50 rows: 49 hash-green + 1 rows-only by
-    # design (approx_distinct — the HLL sketch with no DuckDB oracle,
-    # bounded by tests/test_sketch_tolerance.py).  The window was the
-    # r14 verdict's ordered lead `weighted_sample` (its first driver
-    # row), then the round's NEW `histogram_percentile`, then the 48
-    # oldest r11-vintage rows, exactly as the r14 verdict ordered.
-    "weighted_sample", "histogram_percentile",
-    "dedup_paragraph", "collated_join_agg",
-    "cogroup_asof", "map_in_arrow", "arrow_udf",
-    "pandas_udaf", "quality_sample", "corpus_mix", "param_sql",
-    "identifier_sql", "variant_explode_arr", "transpose_metrics",
-    "window_range_frame",
-    "interval_arith", "explode_outer_demo", "distinct_agg",
-    "approx_distinct", "topk", "window_rank", "window_running",
-    "set_ops", "rollup_agg", "cube_agg", "semi_join", "anti_join",
-    "outer_join", "scalar_funcs", "date_funcs",
-    "cohort_retention", "gap_fill",
-    "sink_partitioned_prune", "sink_json_roundtrip",
-    "sink_orc_roundtrip", "tpch_q1", "tpch_q2", "tpch_q5", "tpch_q7",
-    "tpch_q8", "tpch_q9", "tpch_q11", "tpch_q12",
-    "tpch_q13", "tpch_q16", "tpch_q17",
-    "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-)
-_VERIFIED_R16 = (
-    # CORRECTNESS_r16.json — 50 rows: 48 hash-green + 2 rows-only by
-    # design (hll_mergeable, approx_percentile — the engine-specific
-    # sketches with no DuckDB oracle, bounded by
-    # tests/test_sketch_tolerance.py; both were rows-only in r12 too).
-    # The window was the SIX r15-deferred quantile/frequency
-    # operators, then the round's NEW stream_histogram_pctl, then the
-    # 2 r11-vintage stalest rows (ivf_train, pq_encode), then the 41
-    # oldest r12 rows — exactly as the r15 verdict ordered.
-    "weighted_median", "exact_median_refine", "exact_quartiles_refine",
-    "group_mode", "heavy_hitters", "exact_weighted_median",
-    "stream_histogram_pctl",
-    "ivf_train", "pq_encode",
-    "sql_script", "exec_immediate",
-    "salted_join", "fuzzy_join",
-    "sink_range_cluster", "unpivot_metrics", "lateral_topn",
-    "bitmap_presence", "group_size_hist", "chunk_documents",
-    "pack_sequences", "redact_pii", "train_test_split",
-    "cross_source_overlap", "dedup_keep_best", "embedding_quantize",
-    "pq_search", "ivf_pq_search", "bm25_scores", "bigram_lm",
-    "perplexity_score", "vocab_coverage", "sink_xml_roundtrip",
-    "map_funcs", "hll_mergeable", "variant_json", "json_funcs",
-    "case_expr", "having_filter", "approx_percentile",
-    "stream_dedup", "agg_collect", "recursive_cte", "tvf_range_join",
-    "listagg_stats", "session_funnel", "bloom_filter_join",
-    "udtf_word_runs", "observed_clean", "reservoir_sample",
-    "approx_topk_tokens",
-)
-_VERIFIED_R17 = (
-    # CORRECTNESS_r17.json — 50 rows, ALL hash-green (zero rows-only
-    # in the window for the first time since r13).  The window was
-    # the SIX r16-deferred TPC-DS-lite shapes (their first driver
-    # rows), then the 9 r12-vintage rows (reference-core
-    # filter/sum/take among them), then the 35 oldest r13 rows —
-    # exactly as the r16 verdict ordered; _VERIFIED_R12 dissolved.
-    "tpcds_q1", "tpcds_q34", "tpcds_q36", "tpcds_q47", "tpcds_q51",
-    "tpcds_q88",
-    "stateful_profile", "stream_static_join",
-    "pipe_sql", "try_arith",
-    "pysource_scan", "sink_compaction", "filter", "sum", "take",
-    "skyline_pareto", "ntile_deciles", "mad_outliers", "null_safe_join",
-    "topk_cumshare", "time_weighted_avg",
-    "partition", "join", "join_agg", "tpch_q3", "tpch_q6", "tpch_q15",
-    "group_agg", "asof_join", "range_join", "pivot", "grouping_sets",
-    "scalar_subquery", "decorrelated_subquery", "stats_agg",
-    "percentiles", "hash_sample", "string_funcs2", "null_funcs",
-    "tpch_q10", "tpch_q14", "tpch_q18", "tpch_q4", "window_nav",
-    "window_dist", "in_subquery", "full_outer_join", "array_funcs",
-    "date_arith", "union_by_name",
-)
-_VERIFIED_R18 = (
-    # CORRECTNESS_r18.json — 50 rows: 48 hash-green + 2 rows-only by
-    # design (mm_decode, mm_frame_sample — `err: no_oracle`, identical
-    # state in every window back to CORRECTNESS_r02; verified by local
-    # byte-exact differentials).  The window was the FIVE r17
-    # registrations (their first driver rows), then the 15 remaining
-    # r13 rows, then the 30 oldest r14 rows — exactly as the r17
-    # verdict ordered; _VERIFIED_R13 dissolved.
-    "tpcds_q14", "tpcds_q58", "tpcds_q67", "tpcds_q78",
-    "stream_replay_chunked", "pandas_udf_demo", "sql_udf", "merge_upsert",
-    "statestore_read", "stream_dedup_unbounded", "cache_scan",
-    "udtf_analyze", "variant_paths", "fact_fact_join", "decontaminate",
-    "stratified_sample", "grouped_ols", "sink_csv_roundtrip",
-    "bucketed_join", "stream_foreach_batch", "histogram_median",
-    "dedup_incremental", "repetition_score", "stateful_user_stats",
-    "stream_tumbling", "window_sliding", "session_window",
-    "stream_stream_join", "rolling_fingerprint", "tfidf_top_terms",
-    "text_clean", "token_positions", "pipeline_corpus", "quality_score",
-    "lang_id", "fingerprint", "token_hist", "token_count", "text_stats",
-    "dedup_exact", "minhash_signatures", "dedup_minhash_pairs",
-    "dedup_jaccard", "dedup_clusters", "simhash_md5", "simhash",
-    "mm_metadata", "mm_decode", "mm_agg", "mm_frame_sample",
-)
-_DRIVER_VERIFIED: frozenset[str] = frozenset(
-    _VERIFIED_R14 + _VERIFIED_R15 + _VERIFIED_R16 + _VERIFIED_R17
-    + _VERIFIED_R18
-)
-
-# Explicit ordering among unverified queries, so window priority does
-# not depend on module import order.  Unverified (new) queries lead;
-# verified rows rotate oldest-first.  The r19 window (50 rows) = the
-# SEVEN r18 registrations (never driver-checked; fully oracled at all
-# three SFs, plan-gated, driver-sim green, deferred from r18 by
-# design), then the NINE queries the r18 optimization round touched
-# most aggressively that the r18 window never sampled (_RECHECK_FIRST
-# — the r18 verdict's item 7, so the optimizer's changes get
-# driver-side oracle confirmation), then the 15 remaining r14 rows,
-# then the 19 oldest r15 rows.  After r19 the oldest row is
-# r15-vintage.
-_HIGH_PRIORITY: tuple[str, ...] = (
-    "tpcds_q23",
-    "tpcds_q64",
-    "stream_replay_chunked_lo",
-    "tpcds_q5",
-    "tpcds_q93",
-    "tpcds_q39",
-    "tpcds_q49",
-)
-# No deferrals this round: r19 registers no new queries (optimization
-# round), so every unverified name fits ahead of the verified tail.
-_LOW_PRIORITY: tuple[str, ...] = ()
-# Verified rows hoisted to the FRONT of the verified tail (right
-# behind the unverified leads): the r18 verdict's item 7 list — the
-# queries the r18 optimization changes touched hardest whose last
-# driver check predates those changes.  Several were touched again in
-# r19 (see OPTIMIZATION_r19.md), which these slots also confirm.
-_RECHECK_FIRST: tuple[str, ...] = (
-    "stream_full_outer_join",
-    "stream_left_outer_join",
-    "joinstate_read",
-    "bloom_filter_join",
-    "fuzzy_join",
-    "cogroup_asof",
-    "sink_zorder",
-    "dedup_paragraph",
-    "pysink_write",
-)
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _ordered_names() -> list[str]:
-    names = list(_registry.all_queries().keys())
-    unverified = [n for n in names if n not in _DRIVER_VERIFIED]
-    pri = {n: i for i, n in enumerate(_HIGH_PRIORITY)}
-    first = [n for n in unverified if n in pri and n not in _LOW_PRIORITY]
-    first.sort(key=pri.get)
-    mid = [n for n in unverified if n not in pri and n not in _LOW_PRIORITY]
-    low = sorted(
-        (n for n in unverified if n in _LOW_PRIORITY),
-        key=_LOW_PRIORITY.index,
-    )
-    # Already-verified tail: the explicit re-check hoists lead (r18
-    # verdict item 7), then oldest-verified-round first so the stalest
-    # rows re-check soonest: the 15 remaining r14 rows (minus hoists),
-    # then r15, r16, r17, r18.
-    seen = set(first + mid + low)
-    recheck = [
-        n for n in _RECHECK_FIRST
-        if n in names and n in _DRIVER_VERIFIED and n not in seen
-    ]
-    seen.update(recheck)
-    rest: list[str] = []
-    for tier in (_VERIFIED_R14, _VERIFIED_R15,
-                 _VERIFIED_R16, _VERIFIED_R17, _VERIFIED_R18):
-        rest += [n for n in tier if n in names and n not in seen]
-        seen.update(tier)
-    rest += [n for n in names if n in _DRIVER_VERIFIED and n not in seen]
-    # lows go BEHIND the verified tail: deliberately deferred past this
-    # round's window (see _LOW_PRIORITY comment)
-    return first + mid + recheck + rest + low
+def _ordered_names(artifact_dir: str = _HERE) -> list[str]:
+    """Registered names, re-ranked by the driver's CORRECTNESS_r{N}.json.
+
+    The driver checks only a window from the FRONT of queries(), so
+    queries with no passing row lead (in registration order) and the
+    rest follow oldest last check first.  A query's last check is
+    (round, position in that round's file) of its newest passing row;
+    rows-only queries pass with ``err == "no_oracle"``.
+    """
+    last: dict[str, tuple[int, int]] = {}
+    for fname in os.listdir(artifact_dir):
+        m = _ARTIFACT.fullmatch(fname)
+        if not m:
+            continue
+        path = os.path.join(artifact_dir, fname)
+        try:
+            with open(path) as fh:
+                rows = json.load(fh)
+            for pos, (name, row) in enumerate(rows.items()):
+                if row["err"] == "no_oracle" or all(
+                    row[k] for k in ("rows_match", "schema_match", "hash_match")
+                ):
+                    last[name] = max(last.get(name, (0, 0)), (int(m[1]), pos))
+        except (ValueError, AttributeError, KeyError, TypeError) as e:
+            raise ValueError(f"malformed driver artifact {path}: {e!r}") from e
+    names = list(_registry.all_queries())
+    return sorted(names, key=lambda n: (n in last, last.get(n, (0, 0))))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -332,6 +332,16 @@ def _slowest(
     return {n: timings[n] for n in names}
 
 
+def _cpus_field(raw: str) -> int | str:
+    """$SPARK_GRAFT_CPUS for the contract line: the integer when it is
+    one, else the raw string (e.g. "*") — parsing runs after all
+    measurement, so it must never raise and lose the artifact."""
+    try:
+        return int(raw)
+    except ValueError:
+        return raw
+
+
 def _spread(totals: list[float]) -> float:
     """Relative spread (max-min)/median of the warm pass totals; 0.0
     when fewer than two passes. True even-length median — with the
@@ -570,7 +580,7 @@ def main() -> None:
         # suspect_cpus_ignored heuristic fired on the floor-bound core
         # subset.  Echo both the requested core count and the
         # scheduler's actual parallelism so the artifact self-certifies.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": _cpus_field(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "n_runs": n_runs,
         # r5 lesson: probes/sims running concurrently inflated

@@ -470,8 +470,11 @@ def _propagate_min_labels(
     exchange elision depends on.
 
     RAISES past max_rounds rather than returning partial clusters —
-    this plain (non-doubling) propagation needs `diameter` rounds, so
-    max_rounds IS the deepest duplicate chain supported.
+    this plain (non-doubling) propagation needs `diameter` rounds to
+    settle plus one to observe the fixpoint, so a graph converges iff
+    max_rounds >= max(diameter + 1, 2): max_rounds - 1 is the deepest
+    duplicate chain supported, and even an edgeless graph needs 2
+    rounds (the first has no previous checksum to compare against).
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")

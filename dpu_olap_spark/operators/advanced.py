@@ -863,7 +863,8 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     is decidable among survivors.  Phase 2 re-sweeps the survivors —
     bounded by buckets x distinct sizes (32 x 50 here), NOT by fact
     rows — in a single-partition global window (same justification as
-    tpch_q15's dim-bounded rank; allowlisted in tools/plan_scan.py).
+    tpch_q15's dim-bounded rank; allowlisted in the plan lint of
+    tests/test_oracle_parity.py).
     The survivor count is what a 1000-executor run ships to one task,
     which is why phase 1 must partition-prune the fact table first."""
     pts = load_table(spark, sf_dir, "part").select(

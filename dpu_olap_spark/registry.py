@@ -67,34 +67,19 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Imports are for their registration side effects. tpch_full loads
-    # LAST on purpose: its queries are the newest (least driver-verified)
-    # and __spark_entry__ orders unverified queries by registration, so
-    # queries awaiting their first CORRECTNESS row keep window priority.
+    # Imports are for their registration side effects.  Registration
+    # order is the driver window's order among queries that have no
+    # passing CORRECTNESS row yet (__spark_entry__._ordered_names), so
+    # newer families load later.
     from dpu_olap_spark.operators import advanced, events_analytics, functions_ext, reference, relational  # noqa: F401
     from dpu_olap_spark.llm import chunking, curation, dedup, multimodal, similarity, text_analysis  # noqa: F401
     from dpu_olap_spark.streaming import stateful, windows  # noqa: F401
-    # sink round-trips + foreachBatch before tpch_full: the sink layer
-    # has no prior CORRECTNESS row at all (component-level gap), while
-    # the TPC-H family already has 8 driver-green members
     from dpu_olap_spark.sources import python_source, sink_queries  # noqa: F401
     from dpu_olap_spark.streaming import foreach  # noqa: F401
     from dpu_olap_spark.operators import tpch_full  # noqa: F401
-    # round-6 Spark-4 surface (cache/UDTF-analyze/variant-paths) —
-    # loaded last so these unverified queries lead the driver window
     from dpu_olap_spark.operators import spark4_surface  # noqa: F401
-    # streaming python source: registered but deferred to the BACK of
-    # the r6 window (__spark_entry__._LOW_PRIORITY) so the r2-vintage
-    # re-verification cohort keeps its 45 slots; promote in r7
     from dpu_olap_spark.sources import python_stream_source  # noqa: F401
-    # r16 TPC-DS-lite family: registered this round, deferred to the
-    # BACK of the r16 window (__spark_entry__._LOW_PRIORITY) so the
-    # six r15-deferred operators + the stale r12 cohort keep their
-    # slots; the verdict feeds these into the r17 window
     from dpu_olap_spark.operators import tpcds_lite  # noqa: F401
-
-    # r17: the chunked-replay entry point + its driver-checkable
-    # registration (stream_replay_chunked)
     from dpu_olap_spark.streaming import replay  # noqa: F401
 
     _LOADED = True

@@ -29,7 +29,7 @@ _CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Python UDTFs plan BatchEvalPythonUDTF (row-at-a-time pickling) by
     # default; the Arrow path batches like every other Python seam in
-    # this engine. Found by tools/plan_scan.py — the only two
+    # this engine. Found by the fleet plan lint — the only two
     # row-at-a-time nodes in the 190-query registry were the UDTFs.
     "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
     # Deterministic timestamp semantics vs the DuckDB oracle.

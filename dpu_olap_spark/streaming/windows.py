@@ -42,10 +42,10 @@ def interval_join_pipeline(
 ) -> DataFrame:
     """The purchases x clicks 30-minute interval join shared by
     stream_stream_join / stream_left_outer_join /
-    stream_full_outer_join, the replay entry point
-    (streaming.replay), and the tuning sweep
-    (tools/stream_join_sweep.py) — ONE definition so the measured
-    levers apply to the registered pipeline verbatim.  ``source`` is
+    stream_full_outer_join and the replay entry point
+    (streaming.replay) — ONE definition, so the replay levers
+    measured on it (SCALE.md, round-16 stream-stream join replay)
+    apply to the registered pipeline verbatim.  ``source`` is
     an optional zero-arg factory returning a fresh streaming events
     DF (the chunked-replay variants); default = the single-file
     loader.  ``watermark`` parametrizes the eviction horizon (both
@@ -58,9 +58,10 @@ def interval_join_pipeline(
     bookkeeping per source per micro-batch — measured on the 5-batch
     chunked replay at sf0.1: latestOffset 320→170 ms, getBatch
     58→32 ms, queryPlanning ~−10%, identical 39,705 emitted rows and
-    value checksum (tools/replay_shared_source_ab.py).  Each side
-    still scans its own branch; watermarks stay per-branch (Spark's
-    min-watermark policy across the two, unchanged by sharing)."""
+    value checksum (OPTIMIZATION_r19.md, "Shared streaming source").
+    Each side still scans its own branch; watermarks stay per-branch
+    (Spark's min-watermark policy across the two, unchanged by
+    sharing)."""
     shared = source() if source is not None else load_events_stream(spark, sf_dir)
 
     def side(kind: str, id_alias: str, ts_alias: str) -> DataFrame:

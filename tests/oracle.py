@@ -248,24 +248,25 @@ def assert_pandas_view_matches(srows, scols, oracle: str, sf_dir: str, name: str
         )
 
 
-def assert_query_matches_oracle(spark, query, sf_dir: str):
-    """STRICT differential gate (raw-type equality). When strict
-    comparison fails but the lenient canon agrees, the error says so —
-    that pattern is exactly a representation-only divergence the
-    driver's hash can also see (round 2's three sink failures)."""
-    sdf = query.build(spark, sf_dir)
+def assert_matches_oracle(name: str, sdf, oracle: str, sf_dir: str):
+    """STRICT differential gate (raw-type equality): collect ``sdf``
+    and compare it with ``oracle`` run on DuckDB over ``sf_dir``.
+    When strict comparison fails but the lenient canon agrees, the
+    error says so — that pattern is exactly a representation-only
+    divergence the driver's hash can also see (round 2's three sink
+    failures)."""
     srows = [tuple(r) for r in sdf.collect()]
     scols = list(sdf.columns)
-    orows, ocols = run_oracle(query.oracle, sf_dir)
+    orows, ocols = run_oracle(oracle, sf_dir)
 
     sset, scols_sorted = _rows_to_multiset(srows, scols)
     oset, ocols_sorted = _rows_to_multiset(orows, ocols)
 
     assert [c.lower() for c in scols_sorted] == [c.lower() for c in ocols_sorted], (
-        f"{query.name}: column mismatch spark={scols_sorted} duckdb={ocols_sorted}"
+        f"{name}: column mismatch spark={scols_sorted} duckdb={ocols_sorted}"
     )
     assert len(sset) == len(oset), (
-        f"{query.name}: row count mismatch spark={len(sset)} duckdb={len(oset)}"
+        f"{name}: row count mismatch spark={len(sset)} duckdb={len(oset)}"
     )
     if sset != oset:
         lenient_s, _ = _rows_to_multiset(srows, scols, canon=_canon)
@@ -278,10 +279,10 @@ def assert_query_matches_oracle(spark, query, sf_dir: str):
         )
         diffs = [(s, o) for s, o in zip(sset, oset) if s != o][:5]
         raise AssertionError(
-            f"{query.name}: {kind}; first differing rows (spark, duckdb): {diffs}"
+            f"{name}: {kind}; first differing rows (spark, duckdb): {diffs}"
         )
     # Second gate: the driver's pandas canonicalization path, which
     # sees representation drift (HUGEINT->float64) that raw-type
     # equality over fetchall() cannot (round 3's five hash-reds all
     # passed the gate above and failed at the driver).
-    assert_pandas_view_matches(srows, scols, query.oracle, sf_dir, query.name)
+    assert_pandas_view_matches(srows, scols, oracle, sf_dir, name)

@@ -122,3 +122,11 @@ def test_slowest_selection_is_deterministic_and_excludes_core():
     assert set(bench._slowest(timings, core, k=99)) == {
         "a_slow", "b_slow", "fast", "mid",
     }
+
+
+def test_cpus_field_echoes_non_integer_env():
+    """A non-integer $SPARK_GRAFT_CPUS (local[*]) is echoed raw on the
+    contract line instead of raising after all measurement is done."""
+    assert bench._cpus_field("4") == 4
+    assert bench._cpus_field("*") == "*"
+    assert bench._cpus_field("") == ""

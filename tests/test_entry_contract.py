@@ -1,17 +1,21 @@
-"""Driver-contract bookkeeping gates for __spark_entry__.py.
+"""Driver-contract gates for __spark_entry__.py.
 
-The driver verifies only a window from the FRONT of queries(); the
-rotation machinery (_VERIFIED_R* tiers, _HIGH/_LOW_PRIORITY) decides
-which operators get a CORRECTNESS row each round. A typo'd name in
-any tuple silently drops a query out of its intended slot, so these
-tests pin the bookkeeping itself — no Spark session needed.
+The driver verifies only a window from the FRONT of queries(), and
+the order is derived from the committed CORRECTNESS_r{N}.json
+artifacts: queries with no passing row lead, the rest follow oldest
+last check first.  These tests pin that derivation on temporary
+artifact directories — no Spark session needed.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import shutil
 import sys
+
+import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -25,33 +29,22 @@ _spec.loader.exec_module(entry)
 from dpu_olap_spark import registry  # noqa: E402
 
 
-def _tiers() -> dict[str, tuple[str, ...]]:
-    return {
-        name: getattr(entry, name)
-        for name in dir(entry)
-        if name.startswith("_VERIFIED_R")
-    }
+_NEVER_CHECKED_BY_R18 = {
+    "tpcds_q23", "tpcds_q64", "tpcds_q5", "tpcds_q93", "tpcds_q39",
+    "tpcds_q49", "stream_replay_chunked_lo",
+}
 
 
-def test_every_bookkeeping_name_is_registered():
-    known = set(registry.all_queries())
-    for tier_name, tier in _tiers().items():
-        stale = [n for n in tier if n not in known]
-        assert not stale, f"{tier_name} names not in registry: {stale}"
-    for tup_name in ("_HIGH_PRIORITY", "_LOW_PRIORITY"):
-        stale = [n for n in getattr(entry, tup_name) if n not in known]
-        assert not stale, f"{tup_name} names not in registry: {stale}"
+def _artifacts(tmp_path, last_round: int) -> str:
+    for r in range(1, last_round + 1):
+        fname = f"CORRECTNESS_r{r:02d}.json"
+        shutil.copy(os.path.join(_REPO, fname), tmp_path / fname)
+    return str(tmp_path)
 
 
-def test_tiers_are_disjoint():
-    seen: dict[str, str] = {}
-    dupes = []
-    for tier_name, tier in _tiers().items():
-        for n in tier:
-            if n in seen:
-                dupes.append((n, seen[n], tier_name))
-            seen[n] = tier_name
-    assert not dupes, f"names in multiple verified tiers: {dupes}"
+def _row(ok: bool = True) -> dict:
+    return {"rows_match": ok, "schema_match": ok, "hash_match": ok,
+            "spark_rows": 1, "oracle_rows": 1, "err": None}
 
 
 def test_ordering_covers_registry_exactly_once():
@@ -60,27 +53,54 @@ def test_ordering_covers_registry_exactly_once():
     assert set(names) == set(registry.all_queries()), (
         "ordering and registry diverge"
     )
+    assert list(entry.queries()) == names
 
 
-def test_unverified_lead_the_window():
-    """Every name without a driver CORRECTNESS row must sort before
-    every already-verified name (except deliberate _LOW_PRIORITY
-    deferrals) — otherwise a new operator can silently miss its
-    verification window."""
-    names = entry._ordered_names()
-    low = set(entry._LOW_PRIORITY)
-    verified_positions = [
-        i for i, n in enumerate(names) if n in entry._DRIVER_VERIFIED
+def test_unverified_lead_the_window(tmp_path):
+    """Queries with no passing driver row through r18 (the seven r18
+    registrations) lead, in registration order, so a new operator
+    cannot miss its verification window."""
+    names = entry._ordered_names(_artifacts(tmp_path, 18))
+    assert names[:7] == [
+        n for n in registry.all_queries() if n in _NEVER_CHECKED_BY_R18
     ]
-    unverified_positions = [
-        i
-        for i, n in enumerate(names)
-        if n not in entry._DRIVER_VERIFIED and n not in low
-    ]
-    if verified_positions and unverified_positions:
-        assert max(unverified_positions) < min(verified_positions), (
-            "an unverified query sorts behind verified ones"
-        )
+
+
+def test_window_derived_from_artifacts_through_r18(tmp_path):
+    """Given r01..r18, the derived 50-row window is the one r19
+    checked, except the two r16 rows r19 hoisted by hand
+    (bloom_filter_join, fuzzy_join); the next two oldest r15 rows
+    take their slots."""
+    names = entry._ordered_names(_artifacts(tmp_path, 18))
+    with open(os.path.join(_REPO, "CORRECTNESS_r19.json")) as fh:
+        r19 = set(json.load(fh))
+    assert set(names[:50]) == (
+        r19 - {"bloom_filter_join", "fuzzy_join"}
+    ) | {"window_running", "set_ops"}
+
+
+def test_new_artifact_rotates_window(tmp_path):
+    """A new round's artifact moves its passing rows to the back with
+    no code edit; a failing row keeps the query's older last check."""
+    art = _artifacts(tmp_path, 19)
+    before = entry._ordered_names(art)
+    window = before[:50]
+    rows = {n: _row(ok=(i != 0)) for i, n in enumerate(window)}
+    (tmp_path / "CORRECTNESS_r20.json").write_text(json.dumps(rows))
+    after = entry._ordered_names(art)
+    assert after[0] == window[0]
+    assert after[1:178] == before[50:]
+    assert after[178:] == window[1:]
+
+
+def test_no_artifacts_keeps_registration_order(tmp_path):
+    assert entry._ordered_names(str(tmp_path)) == list(registry.all_queries())
+
+
+def test_malformed_artifact_names_the_file(tmp_path):
+    (tmp_path / "CORRECTNESS_r01.json").write_text('{"filter": {"err": null}}')
+    with pytest.raises(ValueError, match="CORRECTNESS_r01.json"):
+        entry._ordered_names(str(tmp_path))
 
 
 def test_oracle_names_match_queries():

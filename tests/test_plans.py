@@ -571,7 +571,7 @@ def test_collated_join_agg_broadcasts_dim_with_collation_keys(spark):
 
 def test_udtf_queries_plan_arrow_eval(spark):
     """Python UDTFs must take the Arrow-batched eval path
-    (session.py pythonUDTF.arrow.enabled — found by tools/plan_scan.py:
+    (session.py pythonUDTF.arrow.enabled — found by the fleet plan lint:
     the default BatchEvalPythonUDTF was the only row-at-a-time Python
     node left in the registry). Row-at-a-time pickling on a 100 TB
     corpus is the canonical slow path; every other Python seam here is

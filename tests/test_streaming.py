@@ -742,20 +742,18 @@ def test_time_ordered_chunked_replay_matches_single_batch(
     import glob
     import os
     import shutil
-    import sys
     import time as _time
     from collections import Counter
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import stream_join_sweep as sw
+    from dpu_olap_spark.sources.tables import run_to_memory_sink
+    from dpu_olap_spark.streaming.replay import chunked_events_source
+    from dpu_olap_spark.streaming.windows import interval_join_pipeline
 
     sf = "/root/testdata/sf0.001"
 
     def drain(source, label):
-        joined = sw.build_fo_join(spark, sf, source=source,
-                                  watermark=watermark)
-        from dpu_olap_spark.sources.tables import run_to_memory_sink
-
+        joined = interval_join_pipeline(spark, sf, how="fullOuter",
+                                        source=source, watermark=watermark)
         sink = f"chunkeq_{n_chunks}_{watermark.split()[0]}_{label}"
         run_to_memory_sink(joined, sink, "append", state_partitions=8)
         rows = Counter(tuple(r) for r in spark.table(sink).collect())
@@ -780,7 +778,7 @@ def test_time_ordered_chunked_replay_matches_single_batch(
         shutil.move(part, tgt)
         os.utime(tgt, (now + i, now + i))
 
-    chunked = drain(sw.chunk_source(spark, chunk_dir, 1), "chunked")
+    chunked = drain(chunked_events_source(spark, chunk_dir), "chunked")
     assert chunked == single and sum(single.values()) > 0, (
         f"chunked replay diverged: {sum(chunked.values())} rows vs "
         f"{sum(single.values())}"

@@ -1,69 +1,76 @@
-"""Driver simulation: plain session, neutral cwd, full oracle loop."""
-import sys, time, traceback
+"""Driver simulation: plain session, neutral cwd, oracle loop over
+queries() in the driver's order, using the Tier-1 comparison
+(tests.oracle.assert_matches_oracle).
 
+Usage: python tools/driver_sim.py [NAME ...] [--sf SF_DIR]
+With no names, smoke-runs entry() and checks every query; with names,
+checks only those.  SPARK_GRAFT_SIM_SLICE=start:count checks a slice
+of the full loop (to split it across processes if the un-tuned 1 GiB
+driver heap gets tight).
+"""
+import argparse
 import os
+import sys
+import time
+import traceback
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from pyspark.sql import SparkSession
 
-from tests.oracle import run_oracle, _rows_to_multiset, assert_pandas_view_matches
+from tests.oracle import assert_matches_oracle
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.ui.showConsoleProgress", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="query names from queries() (default: all)")
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
+                    help="sf dir (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.01)")
+    args = ap.parse_args()
 
-df = entrymod.entry(spark)
-n = df.count()
-print(f"SMOKE entry(): rows={n} schema={df.schema.simpleString()[:120]}")
-assert n >= 0
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
-qs, osql = entrymod.queries(), entrymod.oracle_sql()
-# Optional slice (e.g. SPARK_GRAFT_SIM_SLICE=0:80) to split the loop
-# across two processes if the un-tuned 1 GiB driver heap gets tight
-# on the full registry (NOTES_NEXT_ROUND round-5 item 7).
-_slice = os.environ.get("SPARK_GRAFT_SIM_SLICE")
-if _slice:
-    start, count = (int(x) for x in _slice.split(":"))
-    qs = {n: qs[n] for n in list(qs)[start : start + count]}
-print(f"queries={len(qs)} oracles={len(osql)}")
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    if args.names:
+        qs = {n: qs[n] for n in args.names}
+    else:
+        df = entrymod.entry(spark)
+        print(f"SMOKE entry(): rows={df.count()} schema={df.schema.simpleString()[:120]}")
+        _slice = os.environ.get("SPARK_GRAFT_SIM_SLICE")
+        if _slice:
+            start, count = (int(x) for x in _slice.split(":"))
+            qs = {n: qs[n] for n in list(qs)[start : start + count]}
+    print(f"queries={len(qs)} oracles={len(osql)}")
 
-fails = []
-t0 = time.time()
-for i, name in enumerate(qs):
-    try:
-        sdf = qs[name](spark, SF)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = list(sdf.columns)
-        if name not in osql:
-            print(f"[{i+1}/{len(qs)}] {name}: rows-only rows={len(srows)} OK")
-            continue
-        orows, ocols = run_oracle(osql[name], SF)
-        sset, scs = _rows_to_multiset(srows, scols)
-        oset, ocs = _rows_to_multiset(orows, ocols)
-        ok_cols = [c.lower() for c in scs] == [c.lower() for c in ocs]
-        ok_rows = len(sset) == len(oset)
-        ok_vals = sset == oset
-        ok_pandas = True
-        if ok_cols and ok_rows and ok_vals:
-            try:
-                assert_pandas_view_matches(srows, scols, osql[name], SF, name)
-            except AssertionError as e:
-                ok_pandas = False
-                print(f"  pandas-view gate: {str(e)[:300]}")
-        status = "OK" if (ok_cols and ok_rows and ok_vals and ok_pandas) else "FAIL"
-        if status == "FAIL":
-            fails.append((name, ok_cols, ok_rows, ok_vals, ok_pandas))
-        print(f"[{i+1}/{len(qs)}] {name}: rows={len(sset)}/{len(oset)} cols={ok_cols} vals={ok_vals} pandas={ok_pandas} {status}")
-    except Exception as e:
-        fails.append((name, "EXC", str(e)[:200]))
-        print(f"[{i+1}/{len(qs)}] {name}: EXCEPTION {e}")
-        traceback.print_exc(limit=3)
+    fails = []
+    t0 = time.time()
+    for i, name in enumerate(qs):
+        tag = f"[{i+1}/{len(qs)}] {name}"
+        try:
+            sdf = qs[name](spark, args.sf)
+            if name not in osql:
+                print(f"{tag}: rows-only rows={len(sdf.collect())} OK")
+                continue
+            assert_matches_oracle(name, sdf, osql[name], args.sf)
+            print(f"{tag}: OK")
+        except AssertionError as e:
+            fails.append(name)
+            print(f"{tag}: FAIL {str(e)[:500]}")
+        except Exception as e:
+            fails.append(name)
+            print(f"{tag}: EXCEPTION {e}")
+            traceback.print_exc(limit=3)
 
-print(f"\nTOTAL {len(qs)} queries in {time.time()-t0:.1f}s; failures: {len(fails)}")
-for f in fails:
-    print("FAIL:", f)
+    print(f"\nTOTAL {len(qs)} queries in {time.time()-t0:.1f}s; failures: {len(fails)}")
+    for f in fails:
+        print("FAIL:", f)
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

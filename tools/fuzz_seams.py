@@ -2824,9 +2824,7 @@ def main() -> int:
         os.path.abspath(__file__))))
     from dpu_olap_spark.session import get_spark, tune
     from dpu_olap_spark.sources.tables import load_table
-    from tests.oracle import (
-        _connect, _rows_to_multiset, assert_pandas_view_matches,
-    )
+    from tests.oracle import _connect, assert_matches_oracle
 
     spark = get_spark("fuzz-seams")
     tune(spark)
@@ -2847,32 +2845,12 @@ def main() -> int:
         sql = spark_sql if spark_sql == duck_sql else (
             f"[spark] {spark_sql} ||| [duck] {duck_sql}")
         try:
-            sdf = spark.sql(spark_sql)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = list(sdf.columns)
-            cur = con.execute(duck_sql)
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-            sset, scs = _rows_to_multiset(srows, scols)
-            oset, ocs = _rows_to_multiset(orows, ocols)
-            ok = ([c.lower() for c in scs] == [c.lower() for c in ocs]
-                  and sset == oset)
-            if ok:
-                assert_pandas_view_matches(
-                    srows, scols, duck_sql, args.sf, f"fuzz_{seed}")
-            print(f"seed {seed}: {'OK' if ok else 'DIVERGE'} "
-                  f"rows={len(sset)}/{len(oset)} :: {sql}")
-            if not ok:
-                failures += 1
-                for a, b in zip(sorted(sset, key=repr),
-                                sorted(oset, key=repr)):
-                    if a != b:
-                        print("  spark:", a)
-                        print("  duck: ", b)
-                        break
+            assert_matches_oracle(
+                f"fuzz_{seed}", spark.sql(spark_sql), duck_sql, args.sf)
+            print(f"seed {seed}: OK :: {sql}")
         except AssertionError as e:
             failures += 1
-            print(f"seed {seed}: PANDAS-VIEW DIVERGE :: {sql}\n  {e}")
+            print(f"seed {seed}: DIVERGE :: {sql}\n  {e}")
         except Exception as e:  # noqa: BLE001 - report and continue
             failures += 1
             print(f"seed {seed}: ERROR :: {sql}\n  {type(e).__name__}: {e}")
