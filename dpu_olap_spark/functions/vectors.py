@@ -17,6 +17,8 @@ summation-order ULP differences.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,3 +54,15 @@ def sign_bucket(a: Column, n_bits: int = 8) -> Column:
     for b in bits[1:]:
         out = out + b
     return out.cast("int")
+
+
+def sign_bucket_value(values, n_bits: int = 8) -> int:
+    """``sign_bucket`` of one vector, evaluated on the driver. Same
+    semantics as the column expression: Spark orders NaN above every
+    value, so NaN counts as positive; a null or missing element (past
+    the end of the array) counts as 0."""
+    return sum(
+        2**d
+        for d, x in enumerate(values[:n_bits])
+        if x is not None and (x > 0 or math.isnan(x))
+    )

@@ -585,9 +585,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # p32 1.59s / p16 1.70s / p8 1.44s / p4 1.34s median.  At 100 TB
     # the rows/300k term takes over and the loop keeps conf-level
     # parallelism.
-    from dpu_olap_spark.sources.tables import parquet_row_count
+    from dpu_olap_spark.sources.tables import parquet_row_count, table_path
 
-    n_docs = parquet_row_count(os.path.join(sf_dir, "documents.parquet"))
+    n_docs = parquet_row_count(table_path(sf_dir, "documents"))
     corpus_rows = n_docs + n_docs // 10
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_part = max(4, min(n_conf, corpus_rows // 300_000))

@@ -22,7 +22,13 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dpu_olap_spark.functions.vectors import cosine_sim, dot, l2_norm, sign_bucket
+from dpu_olap_spark.functions.vectors import (
+    cosine_sim,
+    dot,
+    l2_norm,
+    sign_bucket,
+    sign_bucket_value,
+)
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -48,10 +54,14 @@ _ORACLE_SIMS = f"""
 """
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> F.Column:
+def _query_vec(spark: SparkSession, sf_dir: str) -> list:
+    """The query embedding's values, fetched by key (one Spark job)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.where(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()
-    return F.array(*[F.lit(float(x)) for x in row[0]])
+    return emb.where(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()[0]
+
+
+def _vec_literal(values: list) -> F.Column:
+    return F.array(*[F.lit(float(x)) for x in values])
 
 
 @query(
@@ -67,7 +77,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> F.Column:
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-20 by cosine to the vec_id=0 embedding."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
+    qv = _vec_literal(_query_vec(spark, sf_dir))
     return (
         emb.where(F.col("vec_id") != _QUERY_VEC_ID)
         .select("vec_id", cosine_sim(F.col("embedding"), qv).alias("cos_sim"))
@@ -119,13 +129,14 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: prune to the query's LSH bucket (expected corpus/256), then
     exact cosine top-10 within it. At scale the table would be written
-    bucketed/partitioned BY this key so the scan prunes to one bucket."""
+    bucketed/partitioned BY this key so the scan prunes to one bucket.
+    The query's bucket is a pure function of its vector, so it is
+    computed on the driver from the values already fetched."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
+    values = _query_vec(spark, sf_dir)
+    qv = _vec_literal(values)
+    qbucket = sign_bucket_value(values, 8)
     bucketed = emb.withColumn("bucket", sign_bucket(F.col("embedding"), 8))
-    qbucket = (
-        bucketed.where(F.col("vec_id") == _QUERY_VEC_ID).select("bucket").first()[0]
-    )
     return (
         bucketed.where((F.col("bucket") == qbucket) & (F.col("vec_id") != _QUERY_VEC_ID))
         .select("vec_id", "bucket", cosine_sim(F.col("embedding"), qv).alias("cos_sim"))
@@ -356,7 +367,7 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout the scan prunes to one cell's files."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _centroid_literals(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir)
+    qv = _vec_literal(_query_vec(spark, sf_dir))
     assigned = emb.select(
         "vec_id", "embedding", _assign_expr(cents).alias("cell")
     )

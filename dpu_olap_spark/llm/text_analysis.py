@@ -10,8 +10,6 @@ corpus.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,7 +22,7 @@ from dpu_olap_spark.functions.text import (
     tokens,
 )
 from dpu_olap_spark.registry import query
-from dpu_olap_spark.sources.tables import load_table, parquet_row_count
+from dpu_olap_spark.sources.tables import load_table, parquet_row_count, table_path
 
 _SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 _EVAL_HEX_SQL = ", ".join(f"'{h}'" for h in EVAL_HEX)
@@ -361,7 +359,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which the footer row count equals exactly.  The old docs.count()
     # paid a full job (and its scheduling floor) before the main query
     # could even be submitted.
-    n_docs = parquet_row_count(os.path.join(sf_dir, "documents.parquet"))
+    n_docs = parquet_row_count(table_path(sf_dir, "documents"))
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     # tf materialized once (column pruning would otherwise specialize
     # the subtree per consumer and re-explode the corpus for each):

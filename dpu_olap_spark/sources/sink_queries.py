@@ -274,7 +274,7 @@ def q_sink_range_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    back = spark.read.schema(li.schema).parquet(path)
     return (
         back.where(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -318,7 +318,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = _tmp_path("frag")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
 
-    fragmented = spark.read.parquet(frag)
+    fragmented = spark.read.schema(ev.schema).parquet(frag)
     n_bytes = sum(
         os.path.getsize(os.path.join(frag, f))
         for f in os.listdir(frag)
@@ -328,7 +328,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted = _tmp_path("compact")
     fragmented.coalesce(target_files).write.mode("overwrite").parquet(compacted)
 
-    out = spark.read.parquet(compacted)
+    out = spark.read.schema(ev.schema).parquet(compacted)
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
@@ -388,9 +388,9 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round, guide §6: integer min/max stats are exact, so this is the
     # same value as the agg without the full-table scan job); the agg
     # remains as the fallback for stat-less inputs.
-    from dpu_olap_spark.sources.tables import parquet_int_column_max
+    from dpu_olap_spark.sources.tables import parquet_int_column_max, table_path
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
+    src = table_path(sf_dir, "lineitem")
     mxp = parquet_int_column_max(src, "l_partkey")
     mxs = parquet_int_column_max(src, "l_suppkey")
     if mxp is None or mxs is None:
@@ -411,7 +411,7 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Recorded AFTER the write succeeds so the dict never points at a
     # missing/partial directory from a failed build (r7 ADVICE).
     _SINK_PATHS["sink_zorder"] = path
-    back = spark.read.parquet(path)
+    back = spark.read.schema(li.schema).parquet(path)
     return (
         back.where(F.col("l_partkey").between(100, 300))
         .groupBy((F.col("l_suppkey") % 8).cast("bigint").alias("supp_bucket"))

@@ -5,14 +5,28 @@ memory per benchmark (host/generator/generator.cc:22-71). Our scan is
 `spark.read.parquet`, which at 100 TB gives us predicate pushdown,
 column pruning, and partition pruning for free; tests assert the
 pushdown actually reaches the scan (tests/test_plans.py).
+
+Every reader is handed a schema derived from the file's parquet footer
+(`footer_schema`, a driver-side metadata read), so loading a table
+launches no Spark job; without a schema `spark.read.parquet` runs a
+one-task inference job per call. Files whose footer types this module
+does not map (nanosecond or INT96 timestamps, decimals, structs,
+Spark-written files, directories) fall back to Spark's inference.
+The footer readers (`footer_schema`, `parquet_row_count`,
+`parquet_int_column_max`) share one memo keyed by per-file
+fingerprint, so a file rewritten in place is read afresh.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import threading
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -34,18 +48,133 @@ TABLES = (
 BROADCAST_DIMS = ("region", "nation", "supplier")
 
 
-# events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
-# rejects. We read nanos as long (spark.sql.legacy.parquet.nanosAsLong,
-# set in session._CONFS) and truncate to microseconds — the same floor
-# the DuckDB oracle applies when casting TIMESTAMP_NS -> TIMESTAMP.
+# Older testdata wrote events.ts as parquet TIMESTAMP(NANOS) (today it
+# is TIMESTAMP(MICROS)); Spark's vectorized reader rejects nanos. We
+# read them as long (spark.sql.legacy.parquet.nanosAsLong, set in
+# session._CONFS) and truncate to microseconds — the same floor the
+# DuckDB oracle applies when casting TIMESTAMP_NS -> TIMESTAMP.
 _NANO_TS_COLS = {"events": ("ts",)}
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return _restore_nano_ts(df, name)
+    path = table_path(sf_dir, name)
+    schema = footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return _restore_nano_ts(reader.parquet(path), name)
+
+
+# --- parquet footer reads (driver-side metadata, no Spark job) -------------
+
+# (path) -> ((mtime_ns, size), FileMetaData). One entry per file, replaced
+# when the file's fingerprint changes.
+_FOOTERS: dict[str, tuple[tuple[int, int], pq.FileMetaData]] = {}
+
+
+def _footer(path: str) -> pq.FileMetaData:
+    st = os.stat(path)
+    fingerprint = (st.st_mtime_ns, st.st_size)
+    hit = _FOOTERS.get(path)
+    if hit is None or hit[0] != fingerprint:
+        hit = (fingerprint, pq.read_metadata(path))
+        _FOOTERS[path] = hit
+    return hit[1]
+
+
+def _footers(path: str) -> list[pq.FileMetaData]:
+    """Footers of a single file, or of every part file of a directory."""
+    if os.path.isdir(path):
+        return [_footer(f) for f in sorted(glob.glob(os.path.join(path, "*.parquet")))]
+    return [_footer(path)]
+
+
+# Arrow types whose Spark inference is fixed under session._CONFS. A
+# tz-naive timestamp[us] reads as TIMESTAMP because
+# inferTimestampNTZ=false; timestamp[ns] is absent because nanosAsLong
+# reads it as bigint, and INT96 footers surface as timestamp[ns].
+_SPARK_TYPES = {
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.string(): T.StringType(),
+    pa.bool_(): T.BooleanType(),
+    pa.timestamp("us"): T.TimestampType(),
+    pa.timestamp("us", tz="UTC"): T.TimestampType(),
+}
+
+# Spark writes its own schema into this footer key and infers from it
+# in preference to the parquet types, so the map above does not apply.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_type(t: pa.DataType) -> T.DataType | None:
+    if pa.types.is_list(t):
+        elem = _SPARK_TYPES.get(t.value_type)
+        return None if elem is None else T.ArrayType(elem, containsNull=True)
+    return _SPARK_TYPES.get(t)
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """The schema Spark would infer for one parquet file, derived from
+    its footer on the driver (no Spark job), or None when any column's
+    type is outside the known map, the file was written by Spark, or
+    ``path`` is not a single file — the caller then lets Spark infer."""
+    if not os.path.isfile(path):
+        return None
+    md = _footer(path)
+    if _SPARK_SCHEMA_KEY in (md.metadata or {}):
+        return None
+    fields = []
+    for f in md.schema.to_arrow_schema():
+        st = _spark_type(f.type)
+        if st is None:
+            return None
+        fields.append(T.StructField(f.name, st, nullable=True))
+    return T.StructType(fields)
+
+
+def parquet_row_count(path: str) -> int:
+    """Row count from the parquet footer. Accepts a single file or a
+    directory of part files; each part is memoized by its own
+    fingerprint, so an in-place overwrite of a part (directory mtime
+    unchanged) still refreshes the count."""
+    return sum(md.num_rows for md in _footers(path))
+
+
+def parquet_int_column_max(path: str, column: str) -> int | None:
+    """Exact MAX of an integer column from parquet footer statistics
+    (guide §6: make readers use statistics). Integer min/max stats are
+    exact (no truncation, unlike strings), so this equals the agg
+    result whenever every row group carries stats; returns None
+    otherwise and the caller falls back to the scan. Accepts a single
+    file or a directory of part files, same as parquet_row_count."""
+    mds = _footers(path)
+    if not mds:
+        return None
+    best: int | None = None
+    for md in mds:
+        try:
+            idx = next(
+                i for i in range(len(md.schema))
+                if md.schema.column(i).name == column
+            )
+        except StopIteration:
+            return None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return None
+            mx = st.max
+            if not isinstance(mx, int):
+                return None
+            best = mx if best is None else max(best, mx)
+    return best
 
 
 # --- replay-volume-adaptive state partitioning (SCALE.md §r16) -------------
@@ -73,74 +202,6 @@ STATE_PARTITIONS_DEFAULT = 8
 # At replay scale nothing changes: rows/300k takes over above 1.2M.
 JOIN_STATE_PARTITIONS_FLOOR = 4
 
-_ROW_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def parquet_row_count(path: str) -> int:
-    """Row count from the parquet footer — a driver-side metadata read
-    (no Spark job).  Accepts a single file or a directory of part
-    files.  Cached per PART-FILE fingerprint (name + mtime + size of
-    every matched file), not the directory's own mtime: overwriting an
-    existing part file in place does not touch the directory mtime, so
-    a directory-keyed cache could size replay state for stale volume
-    (the r17 ADVICE fix)."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    files = (
-        sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    key = tuple((f, os.path.getmtime(f), os.path.getsize(f)) for f in files)
-    n = _ROW_COUNT_CACHE.get(key)
-    if n is None:
-        n = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-        _ROW_COUNT_CACHE[key] = n
-    return n
-
-
-def parquet_int_column_max(path: str, column: str) -> int | None:
-    """Exact MAX of an integer column from parquet footer statistics —
-    a driver-side metadata read, no Spark job (guide §6: make readers
-    use statistics).  Integer min/max stats are exact (no truncation,
-    unlike strings), so this equals the agg result whenever every row
-    group carries stats; returns None otherwise and the caller falls
-    back to the scan.  Accepts a single file or a directory of part
-    files, same as parquet_row_count."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    files = (
-        sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        return None
-    best: int | None = None
-    for f in files:
-        md = _pq.ParquetFile(f).metadata
-        try:
-            idx = next(
-                i for i in range(len(md.schema))
-                if md.schema.column(i).name == column
-            )
-        except StopIteration:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mx = st.max
-            if not isinstance(mx, int):
-                return None
-            best = mx if best is None else max(best, mx)
-    return best
-
-
 def replay_state_partitions(n_rows: int, cores: int) -> int:
     """The r16 sweep rule for stream-stream JOIN state partitions:
     ``max(4, min(cores, n_rows // 300_000))``.  Measured at 10M events
@@ -161,7 +222,7 @@ def join_replay_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Volume-adaptive state partitions for the registered
     stream-stream join queries: events row count from the parquet
     footer, cores from the local scheduler."""
-    n = parquet_row_count(os.path.join(sf_dir, "events.parquet"))
+    n = parquet_row_count(table_path(sf_dir, "events"))
     return replay_state_partitions(n, spark.sparkContext.defaultParallelism)
 
 
@@ -222,20 +283,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-_EVENTS_RAW_SCHEMA_CACHE: dict[str, object] = {}
-
-
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source for the events table: raw-schema file stream
-    (ts still a nano-epoch long) with the nano->micro restoration
-    applied on the streaming DF. Single point of truth for every
-    streaming query and test. The raw schema (a driver-side parquet
-    footer read) is cached per sf_dir."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = _EVENTS_RAW_SCHEMA_CACHE.get(path)
+    with the nano->micro restoration applied on the streaming DF.
+    Single point of truth for every streaming query and test. The raw
+    schema comes from the footer, or from a batch read when the footer
+    has a type `footer_schema` does not map (e.g. TIMESTAMP(NANOS),
+    read as a nano-epoch long)."""
+    path = table_path(sf_dir, "events")
+    raw_schema = footer_schema(path)
     if raw_schema is None:
         raw_schema = spark.read.parquet(path).schema
-        _EVENTS_RAW_SCHEMA_CACHE[path] = raw_schema
     return _restore_nano_ts(
         spark.readStream.format("parquet")
         .schema(raw_schema)

@@ -45,6 +45,7 @@ from dpu_olap_spark.sources.tables import (
     parquet_row_count,
     replay_state_partitions,
     run_to_memory_sink,
+    table_path,
 )
 
 ROWS_PER_CHUNK = 1_000_000
@@ -309,7 +310,7 @@ def replay_interval_join(
     sweep).  Returns the memory-sink result table."""
     from dpu_olap_spark.streaming.windows import interval_join_pipeline
 
-    events_path = os.path.join(sf_dir, "events.parquet")
+    events_path = table_path(sf_dir, "events")
     n_rows = parquet_row_count(events_path)
     # round-UP division: a history even slightly over one chunk takes
     # the chunked path (the docstring's ">1 chunk auto-chunks"), and
@@ -402,7 +403,7 @@ def _replay_chunked_checked(spark: SparkSession, sf_dir: str, how: str) -> DataF
     ordered chunks per fixture SF, failing loudly if a fixture is ever
     too small to reach the chunked path (r17 ADVICE: a silent
     single-batch degrade would driver-check the wrong code)."""
-    events_path = os.path.join(sf_dir, "events.parquet")
+    events_path = table_path(sf_dir, "events")
     n = parquet_row_count(events_path)
     rows_per_chunk = max(200, n // 4)
     assert -(-n // rows_per_chunk) >= 2, (
