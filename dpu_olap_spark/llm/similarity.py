@@ -11,14 +11,17 @@ Two paths, mirroring production vector-search design:
   shared RNG).
 
 The query vector is fetched by key (vec_id=0) and inlined as a literal
-— the distributed equivalent of broadcasting a parameter; the scan
-that fetches it is a single-row key lookup, not a data-path collect.
+— the distributed equivalent of broadcasting a parameter. Parameter
+vectors (query, centroids, codebooks) are read on the driver straight
+from the parquet file with a vec_id filter (`_vectors`), so fetching
+them launches no Spark job.
 """
 
 from __future__ import annotations
 
 import threading
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,7 +33,7 @@ from dpu_olap_spark.functions.vectors import (
     sign_bucket_value,
 )
 from dpu_olap_spark.registry import query
-from dpu_olap_spark.sources.tables import load_table
+from dpu_olap_spark.sources.tables import fingerprint, load_table, table_path
 
 _QUERY_VEC_ID = 0
 _TOP_K = 20
@@ -54,10 +57,22 @@ _ORACLE_SIMS = f"""
 """
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list:
-    """The query embedding's values, fetched by key (one Spark job)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.where(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").first()[0]
+def _vectors(sf_dir: str, ids) -> dict[int, list]:
+    """{vec_id: embedding values} for the given ids, read on the driver
+    from the embeddings parquet (a file or a directory of part files)
+    with the ids pushed into the read — a parameter lookup, no Spark
+    job."""
+    t = pq.read_table(
+        table_path(sf_dir, "embeddings"),
+        columns=["vec_id", "embedding"],
+        filters=[("vec_id", "in", list(ids))],
+    )
+    return dict(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist()))
+
+
+def _query_vec(sf_dir: str) -> list:
+    """The query embedding's values."""
+    return _vectors(sf_dir, [_QUERY_VEC_ID])[_QUERY_VEC_ID]
 
 
 def _vec_literal(values: list) -> F.Column:
@@ -77,7 +92,7 @@ def _vec_literal(values: list) -> F.Column:
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-20 by cosine to the vec_id=0 embedding."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = _vec_literal(_query_vec(spark, sf_dir))
+    qv = _vec_literal(_query_vec(sf_dir))
     return (
         emb.where(F.col("vec_id") != _QUERY_VEC_ID)
         .select("vec_id", cosine_sim(F.col("embedding"), qv).alias("cos_sim"))
@@ -133,7 +148,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query's bucket is a pure function of its vector, so it is
     computed on the driver from the values already fetched."""
     emb = load_table(spark, sf_dir, "embeddings")
-    values = _query_vec(spark, sf_dir)
+    values = _query_vec(sf_dir)
     qv = _vec_literal(values)
     qbucket = sign_bucket_value(values, 8)
     bucketed = emb.withColumn("bucket", sign_bucket(F.col("embedding"), 8))
@@ -282,16 +297,11 @@ _IVF_ASSIGN_SQL = f"""
 """
 
 
-def _centroid_literals(spark: SparkSession, sf_dir: str):
-    """Fetch the 16 centroid vectors (keyed lookup — a parameter, not a
-    data-path collect) and inline them as an array<struct> literal."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.where(F.col("vec_id") < _N_CENTROIDS)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    return [(int(r.vec_id), [float(x) for x in r.embedding]) for r in rows]
+def _centroid_literals(sf_dir: str):
+    """The 16 centroid vectors (keyed lookup — a parameter, not a
+    data-path collect), to inline as an array<struct> literal."""
+    vecs = _vectors(sf_dir, range(_N_CENTROIDS))
+    return [(c, [float(x) for x in vecs[c]]) for c in sorted(vecs)]
 
 
 def _assign_expr(cents) -> F.Column:
@@ -329,7 +339,7 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is written partitioned/bucketed by cell — that layout IS the
     inverted file."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroid_literals(spark, sf_dir)
+    cents = _centroid_literals(sf_dir)
     return emb.select(
         "vec_id", _assign_expr(cents).cast("bigint").alias("cell")
     )
@@ -366,8 +376,8 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10. Expected candidates ~ corpus/16; with the cell-partitioned
     layout the scan prunes to one cell's files."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroid_literals(spark, sf_dir)
-    qv = _vec_literal(_query_vec(spark, sf_dir))
+    cents = _centroid_literals(sf_dir)
+    qv = _vec_literal(_query_vec(sf_dir))
     assigned = emb.select(
         "vec_id", "embedding", _assign_expr(cents).alias("cell")
     )
@@ -423,7 +433,7 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmarked at probe scale) replaces the fold with plain sum —
     same single-exchange shape, commutative-aggregation speed."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroid_literals(spark, sf_dir)
+    cents = _centroid_literals(sf_dir)
     assigned = emb.select(
         "vec_id", "embedding", _assign_expr(cents).alias("cell")
     )
@@ -533,18 +543,12 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector (codebooks ride the closure) — zero shuffle, linear scan,
     embarrassingly parallel at any corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seed_rows = (
-        emb.where(F.col("vec_id") < _PQ_CODES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
     # sorted: _np_nearest's first-min argmin reproduces the oracle's
     # "distance ties break toward the smaller code" only when entries
-    # are ascending by id — collect() order is not guaranteed on a
-    # multi-file scan (the sibling index-build sites already sort)
-    books = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding]) for r in seed_rows
-    )
+    # are ascending by id — read order is not guaranteed on a
+    # multi-file table (the sibling index-build sites already sort)
+    vecs = _vectors(sf_dir, range(_PQ_CODES))
+    books = [(c, [float(x) for x in vecs[c]]) for c in sorted(vecs)]
 
     def encode(batches):
         import numpy as np
@@ -738,26 +742,27 @@ def _best_code_struct(books, seg: int) -> F.Column:
 # layout — (vec_id, cell, codes[8]) parquet, 8 small ints + a cell id
 # per vector instead of 64 floats. Searches SCAN THIS TABLE and never
 # touch the embeddings again; encode cost is paid once at index-build
-# time, exactly as a real ANN service does it.
-_PQ_INDEX_CACHE: dict[str, str] = {}
+# time, exactly as a real ANN service does it. Each entry is
+# sf_dir -> (embeddings fingerprint, index path): an embeddings file
+# rewritten at the same path rebuilds the index.
+_PQ_INDEX_CACHE: dict[str, tuple[tuple, str]] = {}
 _PQ_INDEX_LOCK = threading.Lock()
 
 
 def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     with _PQ_INDEX_LOCK:
-        path = _PQ_INDEX_CACHE.get(sf_dir)
-        if path is not None:
-            return path
+        fp = fingerprint(table_path(sf_dir, "embeddings"))
+        hit = _PQ_INDEX_CACHE.get(sf_dir)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
         import os
         import tempfile
 
         emb = load_table(spark, sf_dir, "embeddings")
-        param_rows = (
-            emb.where(F.col("vec_id") < max(_PQ_CODES, _N_CENTROIDS))
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        vecs = {int(r.vec_id): [float(x) for x in r.embedding] for r in param_rows}
+        vecs = {
+            c: [float(x) for x in v]
+            for c, v in _vectors(sf_dir, range(max(_PQ_CODES, _N_CENTROIDS))).items()
+        }
         books = [(c, vecs[c]) for c in sorted(vecs) if c < _PQ_CODES]
         cents = [(c, vecs[c]) for c in sorted(vecs) if c < _N_CENTROIDS]
         # tag by a hash of the FULL normalized sf_dir, not its basename:
@@ -807,7 +812,7 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        _PQ_INDEX_CACHE[sf_dir] = path
+        _PQ_INDEX_CACHE[sf_dir] = (fp, path)
         return path
 
 
@@ -890,13 +895,7 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM agree exactly and the top-10 rank (vec_id tiebreak) is
     unambiguous. Plan: codes-table scan + map-side integer adds +
     TakeOrdered — no shuffle, no join, no codeword arithmetic."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    param_rows = (
-        emb.where((F.col("vec_id") < _PQ_CODES) | (F.col("vec_id") == _PQ_QUERY))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    vecs = {int(r.vec_id): [float(x) for x in r.embedding] for r in param_rows}
+    vecs = _vectors(sf_dir, [*range(_PQ_CODES), _PQ_QUERY])
     books = [(c, vecs[c]) for c in sorted(vecs) if c < _PQ_CODES]
     lut = _adc_lut(books, vecs[_PQ_QUERY])
 
@@ -971,13 +970,7 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle, zero joins, zero codeword arithmetic."""
     import math
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    param_rows = (
-        emb.where((F.col("vec_id") < _N_CENTROIDS) | (F.col("vec_id") == _PQ_QUERY))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    vecs = {int(r.vec_id): [float(x) for x in r.embedding] for r in param_rows}
+    vecs = _vectors(sf_dir, [*range(_N_CENTROIDS), _PQ_QUERY])
     cents = [(c, vecs[c]) for c in sorted(vecs) if c < _N_CENTROIDS]
     books = [(c, vecs[c]) for c in sorted(vecs) if c < _PQ_CODES]
     qvec = vecs[_PQ_QUERY]

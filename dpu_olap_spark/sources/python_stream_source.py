@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
+from dpu_olap_spark.sources.tables import (
+    register_python_sources_once,
+    run_available_now,
+    run_to_memory_sink,
+)
 
 _N_ROWS = 40_000
 _N_PARTS = 16
@@ -103,29 +108,22 @@ def _make_stream_source():
     return SynthStreamSource
 
 
-def run_stream_to_sink(
-    spark: SparkSession, sink: str, checkpoint: str, path: str | None = None
-) -> None:
-    """availableNow run of the synth stream with an explicit
-    checkpoint. Default sink is memory (fresh checkpoint per run — the
-    memory sink is not recoverable by design); pass ``path`` to write
-    a parquet sink instead, which IS checkpoint-recoverable and what
-    the resume-semantics test uses."""
-    from dpu_olap_spark.sources.tables import register_python_sources_once
-
+def _synth_stream(spark: SparkSession) -> DataFrame:
     register_python_sources_once(spark)
-    sdf = spark.readStream.format("synth_stream").load()
-    writer = sdf.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint
-    ).trigger(availableNow=True)
-    if path is None:
-        q = writer.format("memory").queryName(sink).start()
-    else:
-        q = writer.format("parquet").option("path", path).start()
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError(f"synth_stream run {sink!r} did not finish in 180s")
+    return spark.readStream.format("synth_stream").load()
+
+
+def run_stream_to_sink(
+    spark: SparkSession, sink: str, checkpoint: str, path: str
+) -> None:
+    """availableNow run of the synth stream into a parquet sink at
+    ``path`` on an explicit checkpoint — checkpoint-recoverable, which
+    is what the resume-semantics test relies on."""
+    writer = (
+        _synth_stream(spark).writeStream.outputMode("append")
+        .format("parquet").option("path", path)
+    )
+    run_available_now(writer, checkpoint, sink)
 
 
 @query(
@@ -148,13 +146,9 @@ def q_pystream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped slices would shift counts and sums).
     tests/test_streaming.py additionally proves the RESUME property:
     a second run on the same checkpoint emits zero new rows."""
-    import tempfile
-
     sink = f"pystream_scan_{next(_sink_counter)}"
-    with tempfile.TemporaryDirectory(prefix=f"ckpt_{sink}_") as ckpt:
-        run_stream_to_sink(spark, sink, ckpt)
     return (
-        spark.table(sink)
+        run_to_memory_sink(_synth_stream(spark), sink, "append")
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

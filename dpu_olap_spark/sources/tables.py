@@ -15,6 +15,12 @@ Spark-written files, directories) fall back to Spark's inference.
 The footer readers (`footer_schema`, `parquet_row_count`,
 `parquet_int_column_max`) share one memo keyed by per-file
 fingerprint, so a file rewritten in place is read afresh.
+
+The module also owns the engine's one runner for finite streams
+(`run_available_now`): every availableNow stream, whatever its sink,
+is started, awaited and stopped there, with its confs set and restored
+under one lock, and raises if it does not finish in time.
+`run_to_memory_sink` is the memory-sink front end to it.
 """
 
 from __future__ import annotations
@@ -71,26 +77,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # --- parquet footer reads (driver-side metadata, no Spark job) -------------
 
-# (path) -> ((mtime_ns, size), FileMetaData). One entry per file, replaced
+# (path) -> (fingerprint, FileMetaData). One entry per file, replaced
 # when the file's fingerprint changes.
-_FOOTERS: dict[str, tuple[tuple[int, int], pq.FileMetaData]] = {}
+_FOOTERS: dict[str, tuple[tuple, pq.FileMetaData]] = {}
+
+
+def _parts(path: str) -> list[str]:
+    """A single file, or every part file of a directory."""
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def fingerprint(path: str) -> tuple[tuple[int, int], ...]:
+    """(mtime_ns, size) of each part of a parquet file or directory:
+    changes whenever any part is rewritten, so caches of anything
+    derived from the table's contents can key on it."""
+    return tuple((st.st_mtime_ns, st.st_size) for st in map(os.stat, _parts(path)))
 
 
 def _footer(path: str) -> pq.FileMetaData:
-    st = os.stat(path)
-    fingerprint = (st.st_mtime_ns, st.st_size)
+    fp = fingerprint(path)
     hit = _FOOTERS.get(path)
-    if hit is None or hit[0] != fingerprint:
-        hit = (fingerprint, pq.read_metadata(path))
+    if hit is None or hit[0] != fp:
+        hit = (fp, pq.read_metadata(path))
         _FOOTERS[path] = hit
     return hit[1]
 
 
 def _footers(path: str) -> list[pq.FileMetaData]:
     """Footers of a single file, or of every part file of a directory."""
-    if os.path.isdir(path):
-        return [_footer(f) for f in sorted(glob.glob(os.path.join(path, "*.parquet")))]
-    return [_footer(path)]
+    return [_footer(f) for f in _parts(path)]
 
 
 # Arrow types whose Spark inference is fixed under session._CONFS. A
@@ -342,6 +359,57 @@ def register_python_sources_once(spark: SparkSession) -> None:
         _PY_SRC_REGISTERED[spark] = True
 
 
+def run_available_now(
+    writer,
+    checkpoint: str,
+    name: str,
+    confs: dict[str, str] | None = None,
+    timeout_s: float = 180,
+) -> None:
+    """Run a finite stream to completion: the one place the engine
+    starts, awaits and stops an availableNow stream.
+
+    ``writer`` is a DataStreamWriter with its sink and output mode set;
+    this adds the checkpoint and the availableNow trigger. ``confs``
+    (e.g. state partitions or the state-store provider) matter only
+    while the stream PLANS — state partitioning is pinned at first
+    start — so they are set, the stream started, and the previous
+    values restored under one lock: concurrent callers (bench's
+    thread-pool phase) never plan against another stream's value or
+    restore a stale one. The long await runs outside the lock. The
+    stream is stopped whatever happens, and a stream that did not
+    finish in time raises — a timed-out stream would otherwise leave
+    partial results behind.
+    """
+    spark = writer._spark
+    confs = confs or {}
+    with _STATE_CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            q = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    try:
+        finished = q.awaitTermination(timeout_s)
+    finally:
+        q.stop()
+    if not finished:
+        raise RuntimeError(
+            f"stream {name!r} did not finish within {timeout_s}s; "
+            "refusing to return partial results"
+        )
+
+
 def run_to_memory_sink(
     stream_df,
     sink_name: str,
@@ -349,13 +417,11 @@ def run_to_memory_sink(
     timeout_s: int = 180,
     state_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
-):
-    """Run a finite (availableNow) stream into a memory sink and FAIL
-    LOUDLY if it does not complete in time — a timed-out stream would
-    otherwise silently return partial aggregates. The previous sink
-    table of the same query family (name minus trailing counter) is
-    dropped so repeated builds don't accumulate result copies on the
-    driver.
+) -> DataFrame:
+    """Run a finite stream into a memory sink (``run_available_now``)
+    and return the sink table. The previous sink table of the same
+    query family (name minus trailing counter) is dropped so repeated
+    builds don't accumulate result copies on the driver.
 
     ``state_partitions`` sizes the stateful operator's state store: a
     streaming query pins spark.sql.shuffle.partitions at FIRST start
@@ -363,55 +429,27 @@ def run_to_memory_sink(
     per-partition state-store commit, so the right number tracks the
     active key cardinality, not the batch-shuffle default (measured at
     sf0.1: 150 user keys, 32 partitions -> 7.9 s, 8 -> 2.9 s). The
-    conf is restored after the run; a concurrently *planned* batch
+    conf is restored after the start; a concurrently *planned* batch
     query would at worst coalesce through AQE, not break.
     """
     import tempfile
 
+    spark = stream_df.sparkSession
     family = sink_name.rstrip("0123456789")
     prev = _LIVE_SINKS.get(family)
     if prev is not None:
         try:
-            stream_df.sparkSession.catalog.dropTempView(prev)
+            spark.catalog.dropTempView(prev)
         except Exception:
             pass
     _LIVE_SINKS[family] = sink_name
 
-    spark = stream_df.sparkSession
+    confs = dict(extra_confs or {})
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    writer = stream_df.writeStream.outputMode(output_mode).format("memory")
     with tempfile.TemporaryDirectory(prefix=f"ckpt_{sink_name}_") as ckpt:
-        # The conf matters only while the streaming query PLANS (state
-        # partitioning is pinned at first start); set->start->restore
-        # under a lock so concurrent callers (bench's thread-pool phase)
-        # never plan against another stream's value or restore a stale
-        # one. The long await runs outside the lock.
-        with _STATE_CONF_LOCK:
-            to_set: dict[str, str] = dict(extra_confs or {})
-            if state_partitions is not None:
-                to_set["spark.sql.shuffle.partitions"] = str(state_partitions)
-            prev_vals = {
-                k: spark.conf.get(k, None) for k in to_set
-            }
-            for k, v in to_set.items():
-                spark.conf.set(k, v)
-            try:
-                q = (
-                    stream_df.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(sink_name)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-            finally:
-                for k, prev in prev_vals.items():
-                    if prev is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, prev)
-        finished = q.awaitTermination(timeout_s)
-        q.stop()
-        if not finished:
-            raise RuntimeError(
-                f"stream {sink_name!r} did not finish within {timeout_s}s; "
-                "refusing to return partial results"
-            )
+        run_available_now(
+            writer.queryName(sink_name), ckpt, sink_name, confs, timeout_s
+        )
+    return spark.table(sink_name)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
-from dpu_olap_spark.sources.tables import load_events_stream
+from dpu_olap_spark.sources.tables import load_events_stream, run_available_now
 
 _run_counter = itertools.count()
 
@@ -46,20 +46,9 @@ def run_foreach_batch_parquet(stream_df: DataFrame, path: str, timeout_s: int = 
             .parquet(path)
         )
 
+    writer = stream_df.writeStream.foreachBatch(write_batch)
     with tempfile.TemporaryDirectory(prefix="ckpt_feb_") as ckpt:
-        q = (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(timeout_s)
-        q.stop()
-        if not finished:
-            raise RuntimeError(
-                f"foreachBatch stream to {path!r} did not finish within "
-                f"{timeout_s}s; refusing to leave a partial sink directory"
-            )
+        run_available_now(writer, ckpt, f"foreachBatch to {path}", timeout_s=timeout_s)
 
 
 @query(

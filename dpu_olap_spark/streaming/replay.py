@@ -339,11 +339,10 @@ def replay_interval_join(
         spark, sf_dir, how=how, watermark=watermark, source=source
     )
     sink = f"replay_ij_{how.lower()}_{next(_replay_counter)}"
-    run_to_memory_sink(
+    return run_to_memory_sink(
         joined, sink, "append",
         timeout_s=timeout_s, state_partitions=partitions,
     )
-    return spark.table(sink)
 
 
 # --- driver-checkable registration of the chunked path ---------------------

@@ -27,7 +27,12 @@ interleaving. Arrow batches keep the Python hop amortized.
 
 from __future__ import annotations
 
+import atexit
 import itertools
+import os
+import shutil
+import tempfile
+import time
 from collections.abc import Iterator
 from typing import Any
 
@@ -41,7 +46,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     events_state_partitions,
+    join_replay_partitions,
     load_events_stream,
+    load_table,
+    run_available_now,
     run_to_memory_sink,
 )
 
@@ -431,8 +439,9 @@ def q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "RocksDBStateStoreProvider"
         }
     sink = f"stateful_profile_{next(_sink_counter)}"
-    run_to_memory_sink(out, sink, "update", state_partitions=8, extra_confs=extra)
-    return finalize_user_profile(spark.table(sink))
+    return finalize_user_profile(
+        run_to_memory_sink(out, sink, "update", state_partitions=8, extra_confs=extra)
+    )
 
 
 @query(
@@ -456,16 +465,17 @@ def q_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"stateful_user_stats_{next(_sink_counter)}"
     # state partitions sized to the ~150-user active key set (see
     # run_to_memory_sink docstring; 4x fewer state-store commits/batch)
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
-    return finalize_user_stats(spark.table(sink))
+    return finalize_user_stats(
+        run_to_memory_sink(out, sink, "update", state_partitions=8)
+    )
 
 
 # The state-reader queries keep one LIVE checkpoint per key; rebuilds
 # retire the previous one to a process-exit cleanup list instead of
 # rmtree-ing it immediately — the returned DataFrame is lazy over the
 # checkpoint, so rebuild-time deletion races a concurrent or
-# still-unevaluated prior read (same hazard class as pysink_write /
-# _TT_DIRS; r6 ADVICE item).
+# still-unevaluated prior read (same hazard class as pysink_write;
+# r6 ADVICE item).
 _SS_CKPT: dict[str, str] = {}
 _SS_RETIRED: dict[str, list[str]] = {}
 # How many retired generations to keep per key before eager deletion.
@@ -481,8 +491,6 @@ def _swap_ckpt(key: str, ckpt: str) -> None:
     """Record `ckpt` as the live checkpoint for `key`; retire the
     previous one (deleted after _SS_RETIRED_KEEP newer retirements of
     the same key, or at process exit, whichever comes first)."""
-    import shutil
-
     old = _SS_CKPT.pop(key, None)
     if old is not None:
         retired = _SS_RETIRED.setdefault(key, [])
@@ -490,6 +498,55 @@ def _swap_ckpt(key: str, ckpt: str) -> None:
         while len(retired) > _SS_RETIRED_KEEP:
             shutil.rmtree(retired.pop(0), ignore_errors=True)
     _SS_CKPT[key] = ckpt
+
+
+@atexit.register
+def _cleanup_checkpoints() -> None:
+    # retired state-reader checkpoints (replaced by a rebuild) and the
+    # final live ones: no reader can outlive the interpreter, so both
+    # are safe to remove here and only here
+    retired = [d for lst in _SS_RETIRED.values() for d in lst]
+    for d in retired + list(_SS_CKPT.values()):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# The provider swap and changelog flag a deployment flips for RocksDB
+# state; changelog checkpointing is also what makes the change feed
+# readable.
+_ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+        "true",
+}
+
+
+def _run_for_state(
+    stream_df: DataFrame,
+    output_mode: str,
+    name: str,
+    key: str,
+    state_partitions: int,
+    extra_confs: dict[str, str] | None = None,
+) -> str:
+    """Run a state reader's finite stream to a noop sink on a fresh
+    checkpoint and make it the live checkpoint for ``key``: the reader
+    reads the operator's state from the checkpoint, never a sink."""
+    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+    confs = {"spark.sql.shuffle.partitions": str(state_partitions), **(extra_confs or {})}
+    writer = stream_df.writeStream.outputMode(output_mode).format("noop")
+    run_available_now(writer, ckpt, name, confs)
+    _swap_ckpt(key, ckpt)
+    return ckpt
+
+
+def _user_counts(state: DataFrame) -> DataFrame:
+    """(user_id, n_events) from the state rows of a per-user count."""
+    return state.select(
+        F.col("key.user_id").alias("user_id"),
+        F.col("value.count").cast("bigint").alias("n_events"),
+    )
 
 
 @query(
@@ -511,46 +568,16 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit state size per partition, or bulk-fix corrupt state without
     replaying the stream (pair with the state-metadata source, which
     tests/test_streaming.py asserts lists this operator). The
-    checkpoint persists for the read (unlike run_to_memory_sink's
-    auto-removed tempdir); one per process, replaced on rebuild."""
-    import tempfile
-
+    stream runs to a noop sink (the reader needs only its checkpoint,
+    so no sink table is registered); the checkpoint persists for the
+    read, one live per process, retired on rebuild (`_swap_ckpt`)."""
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    ckpt = tempfile.mkdtemp(prefix="ss_read_ckpt_")
-    sink = f"statestore_read_{next(_sink_counter)}"
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_read stream did not finish in 180s")
-    _swap_ckpt("ckpt", ckpt)
-    state = spark.read.format("statestore").load(ckpt)
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").cast("bigint").alias("n_events"),
+    ckpt = _run_for_state(
+        agg, "update", "statestore_read", "ckpt",
+        events_state_partitions(spark, sf_dir),
     )
+    return _user_counts(spark.read.format("statestore").load(ckpt))
 
 
 @query(
@@ -609,41 +636,16 @@ def q_statestore_session_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is hardest to reason about from the outside. State shards by
     the stream's key partitioning (8 here, pinned like statestore_read
     so the reader sees a stable layout)."""
-    import tempfile
-
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "3650 days")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    ckpt = tempfile.mkdtemp(prefix="ss_sess_ckpt_")
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_session_read stream did not finish in 180s")
-    _swap_ckpt("sess_ckpt", ckpt)
+    ckpt = _run_for_state(
+        agg, "append", "statestore_session_read", "sess_ckpt",
+        events_state_partitions(spark, sf_dir),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -698,8 +700,6 @@ def q_joinstate_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     least observable stateful operator (two stores per side); this
     reads it as a DataFrame to audit per-key growth, find the entity
     whose clicks never evict, or right-size watermark delays."""
-    import tempfile
-
     from dpu_olap_spark.streaming.windows import interval_join_pipeline
 
     # The shared pipeline's output projection only shapes the noop
@@ -707,34 +707,10 @@ def q_joinstate_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (value.purchase_user etc.), whose schema is the side inputs —
     # identical to the pre-refactor inline construction.
     joined = interval_join_pipeline(spark, sf_dir, how="inner")
-    ckpt = tempfile.mkdtemp(prefix="joinstate_ckpt_")
-    from dpu_olap_spark.sources.tables import (
-        _STATE_CONF_LOCK,
-        join_replay_partitions,
+    ckpt = _run_for_state(
+        joined, "append", "joinstate_read", "join_ckpt",
+        join_replay_partitions(spark, sf_dir),
     )
-
-    state_parts = join_replay_partitions(spark, sf_dir)
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("joinstate_read stream did not finish in 180s")
-    _swap_ckpt("join_ckpt", ckpt)
     left = (
         spark.read.format("statestore")
         .option("joinSide", "left")
@@ -788,23 +764,16 @@ def q_rocksdb_state_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint")).alias("cents"),
     )
     sink = f"rocksdb_state_agg_{next(_sink_counter)}"
-    run_to_memory_sink(
+    snap = run_to_memory_sink(
         agg,
         sink,
         "update",
         state_partitions=events_state_partitions(spark, sf_dir),
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
-                "true",
-        },
+        extra_confs=_ROCKSDB_CONFS,
     )
     # update-mode sinks may hold multiple snapshots per key (one per
     # micro-batch that touched it); keep the LAST snapshot per key —
     # with a finite source it equals the batch aggregate
-    snap = spark.table(sink)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id", "event_type").orderBy(F.col("n_events").desc())
@@ -840,45 +809,12 @@ def q_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-batch change counts would be split-dependent; final state is
     not). update-mode aggregation never deletes, so the last change
     per key is its final value."""
-    import tempfile
-
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    ckpt = tempfile.mkdtemp(prefix="ss_cf_ckpt_")
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        to_set = {
-            "spark.sql.shuffle.partitions":
-                str(events_state_partitions(spark, sf_dir)),
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-        }
-        prev_vals = {k: spark.conf.get(k, None) for k in to_set}
-        for k, v in to_set.items():
-            spark.conf.set(k, v)
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            for k, v in prev_vals.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_changefeed stream did not finish in 180s")
-    _swap_ckpt("cf_ckpt", ckpt)
+    ckpt = _run_for_state(
+        agg, "update", "statestore_changefeed", "cf_ckpt",
+        events_state_partitions(spark, sf_dir), _ROCKSDB_CONFS,
+    )
     feed = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
@@ -889,32 +825,7 @@ def q_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = W.partitionBy("key.user_id").orderBy(F.col("batch_id").desc())
     last = feed.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
-    return last.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").cast("bigint").alias("n_events"),
-    )
-
-
-# time-travel sources/checkpoints accumulate per process and clean at
-# exit (rebuild-time deletion would race concurrent readers — same
-# lesson as pysink_write)
-_TT_DIRS: list[str] = []
-
-
-def _cleanup_tt_dirs() -> None:
-    import shutil
-
-    # retired state-reader checkpoints (replaced by a rebuild) and the
-    # final live ones: no reader can outlive the interpreter, so both
-    # are safe to remove here and only here
-    retired = [d for lst in _SS_RETIRED.values() for d in lst]
-    for d in _TT_DIRS + retired + list(_SS_CKPT.values()):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_cleanup_tt_dirs)
+    return _user_counts(last)
 
 
 @query(
@@ -939,89 +850,58 @@ def q_statestore_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     questions directly from checkpoint snapshots+changelogs without
     replaying the pipeline (snapshotStartBatchId/snapshotPartitionId
     narrow the scan to one partition's snapshot lineage for targeted
-    repair)."""
-    import os
-    import tempfile
-    import time as _time
-
-    from dpu_olap_spark.sources.tables import load_table
-
+    repair). The slice files are deleted as soon as the stream has
+    run: the state reader reads only the checkpoint, which is retired
+    on rebuild like its siblings'."""
     ev = load_table(spark, sf_dir, "events")
 
     src = tempfile.mkdtemp(prefix="tt_src_")
-    _TT_DIRS.append(src)
-    now = _time.time()
-    # ONE pass builds all three slice files (r18 optimization round,
-    # guide §1.2: the previous per-slice loop scanned events three
-    # times in three jobs).  partitionBy splits the single write task
-    # into one file per slice value; repartition(1) is what guarantees
-    # EXACTLY one file per slice — a multi-task write could emit
-    # several part files per slice dir and maxFilesPerTrigger=1 would
-    # then split a slice across batches, breaking the batchId=1 ==
-    # slices 0-1 contract the oracle encodes.  The partitioning column
-    # is synthetic, so the data files keep exactly the original schema.
-    import shutil
-
-    staging = os.path.join(src, "_staged")
-    (
-        ev.withColumn("slice", (F.col("event_id") % 3).cast("int"))
-        .repartition(1)
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(staging)
-    )
-    for k in range(3):
-        sdir = os.path.join(staging, f"slice={k}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        assert len(parts) == 1, (
-            f"expected exactly one part file for slice {k}, got {parts}"
+    try:
+        now = time.time()
+        # ONE pass builds all three slice files (r18 optimization round,
+        # guide §1.2: the previous per-slice loop scanned events three
+        # times in three jobs).  partitionBy splits the single write task
+        # into one file per slice value; repartition(1) is what guarantees
+        # EXACTLY one file per slice — a multi-task write could emit
+        # several part files per slice dir and maxFilesPerTrigger=1 would
+        # then split a slice across batches, breaking the batchId=1 ==
+        # slices 0-1 contract the oracle encodes.  The partitioning column
+        # is synthetic, so the data files keep exactly the original schema.
+        staging = os.path.join(src, "_staged")
+        (
+            ev.withColumn("slice", (F.col("event_id") % 3).cast("int"))
+            .repartition(1)
+            .write.mode("overwrite")
+            .partitionBy("slice")
+            .parquet(staging)
         )
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(sdir, parts[0]), dst)
-        # strictly increasing mtimes pin the oldest-first batch order
-        os.utime(dst, (now - 300 + k * 60, now - 300 + k * 60))
-    shutil.rmtree(staging, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    ckpt = tempfile.mkdtemp(prefix="tt_ckpt_")
-    _TT_DIRS.append(ckpt)
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        for k in range(3):
+            sdir = os.path.join(staging, f"slice={k}")
+            parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
+            assert len(parts) == 1, (
+                f"expected exactly one part file for slice {k}, got {parts}"
             )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_timetravel stream did not finish in 180s")
-    state = (
+            dst = os.path.join(src, f"{k:02d}.parquet")
+            os.rename(os.path.join(sdir, parts[0]), dst)
+            # strictly increasing mtimes pin the oldest-first batch order
+            os.utime(dst, (now - 300 + k * 60, now - 300 + k * 60))
+        shutil.rmtree(staging, ignore_errors=True)
+
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .option("latestFirst", "false")
+            .parquet(src)
+        )
+        agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
+        ckpt = _run_for_state(
+            agg, "update", "statestore_timetravel", "tt_ckpt",
+            events_state_partitions(spark, sf_dir),
+        )
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    return _user_counts(
         spark.read.format("statestore").option("batchId", "1").load(ckpt)
-    )
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").cast("bigint").alias("n_events"),
     )
 
 
@@ -1203,5 +1083,6 @@ def q_stream_histogram_pctl(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"stream_histogram_pctl_{next(_sink_counter)}"
     # ~125 active (group, bucket) cells: 8 state partitions (see
     # run_to_memory_sink's sizing note)
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
-    return finalize_histogram_percentiles(spark.table(sink))
+    return finalize_histogram_percentiles(
+        run_to_memory_sink(out, sink, "update", state_partitions=8)
+    )

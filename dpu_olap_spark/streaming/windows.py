@@ -136,9 +136,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     sink = f"stream_static_join_sink_{next(_sink_counter)}"
-    run_to_memory_sink(agg, sink, "complete",
-                       state_partitions=events_state_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(agg, sink, "complete",
+                              state_partitions=events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -159,9 +158,8 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode memory sink) and returned as the final result table."""
     stream = load_events_stream(spark, sf_dir)
     sink = f"stream_tumbling_sink_{next(_sink_counter)}"
-    run_to_memory_sink(tumbling_agg(stream), sink, "complete",
-                       state_partitions=events_state_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(tumbling_agg(stream), sink, "complete",
+                              state_partitions=events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -287,9 +285,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch join — the oracle."""
     joined = interval_join_pipeline(spark, sf_dir, how="inner")
     sink = f"stream_ss_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(joined, sink, "append",
+                              state_partitions=join_replay_partitions(spark, sf_dir))
 
 
 @query(
@@ -322,10 +319,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     sink = f"stream_dedup_sink_{next(_sink_counter)}"
-    run_to_memory_sink(deduped, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
     return (
-        spark.table(sink)
+        run_to_memory_sink(deduped, sink, "append",
+                           state_partitions=events_state_partitions(spark, sf_dir))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -359,10 +355,9 @@ def q_stream_dedup_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = load_events_stream(spark, sf_dir).select("user_id", "event_type")
     deduped = stream.dropDuplicates(["user_id", "event_type"])
     sink = f"stream_dedup_unb_{next(_sink_counter)}"
-    run_to_memory_sink(deduped, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
     return (
-        spark.table(sink)
+        run_to_memory_sink(deduped, sink, "append",
+                           state_partitions=events_state_partitions(spark, sf_dir))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
@@ -415,9 +410,8 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by (delay + range) per side, sharded by the join key."""
     joined = interval_join_pipeline(spark, sf_dir, how="leftOuter")
     sink = f"stream_lo_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(joined, sink, "append",
+                              state_partitions=join_replay_partitions(spark, sf_dir))
 
 
 @query(
@@ -492,9 +486,8 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sess_app_{next(_sink_counter)}"
-    run_to_memory_sink(agg, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(agg, sink, "append",
+                              state_partitions=events_state_partitions(spark, sf_dir))
 
 
 @query(
@@ -540,6 +533,5 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time - 1 h)."""
     joined = interval_join_pipeline(spark, sf_dir, how="fullOuter")
     sink = f"stream_fo_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
-    return spark.table(sink)
+    return run_to_memory_sink(joined, sink, "append",
+                              state_partitions=join_replay_partitions(spark, sf_dir))

@@ -8313,6 +8313,27 @@ def test_pq_search_mass_tie_at_cut(spark, tmp_path):
     assert got == expect
 
 
+def test_pq_search_rebuilds_index_after_rewrite(spark, tmp_path):
+    """The PQ index cache follows the embeddings file, not just its
+    directory: after pq_search has built an index, embeddings.parquet
+    is rewritten at the SAME path with other vectors (other codebook,
+    other query, more rows), and pq_search must match its oracle on
+    the new file rather than serve codes from the stale index."""
+    _write_embeddings(tmp_path, _pq_fixture())
+    _spark_vs_registered_oracle(spark, "pq_search", tmp_path)
+
+    rng = np.random.default_rng(7)
+    vecs = {
+        i: [float(x) for x in rng.integers(-8, 9, 64).astype(np.float32) / 4]
+        for i in range(120)
+    }
+    _write_embeddings(tmp_path, vecs)
+    _, adc = _pq_adc_walk(vecs, 100)
+    expect = sorted(adc.items(), key=lambda t: (t[1], t[0]))[:10]
+    sdf = _spark_vs_registered_oracle(spark, "pq_search", tmp_path)
+    assert [(r.vec_id, r.adc_d2_micro) for r in sdf.collect()] == expect
+
+
 def test_ivf_pq_search_probe_prunes_candidates(spark, tmp_path):
     """ivf_pq_search differential on the same fixture: the 4-cell probe
     (nearest cell 0 + three distance-tied cells broken by cid ASC)

@@ -1005,3 +1005,127 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
         got = fr._run(spark, sf, "hist_pctl", wm,
                       chunked_events_source(spark, cdir))
         assert got == hb, "histogram op not order-invariant"
+
+
+# --- the finite-stream runner (sources/tables.run_available_now) -----------
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_STATE_PKG = "org.apache.spark.sql.execution.streaming.state."
+
+
+def test_runner_timeout_raises_naming_the_stream(spark, tmp_path):
+    """A stream that does not finish in time raises, naming itself, and
+    is stopped, not left running behind the error."""
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    agg = _stream_events(spark, SF).groupBy("user_id").count()
+    writer = agg.writeStream.outputMode("update").format("noop")
+    with pytest.raises(RuntimeError, match="runner_timeout_probe"):
+        run_available_now(
+            writer, str(tmp_path / "ckpt"), "runner_timeout_probe", timeout_s=0.001
+        )
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("preset", [False, True], ids=["unset_before", "set_before"])
+def test_runner_restores_confs(spark, tmp_path, preset):
+    """The confs the runner sets for planning read the same afterwards as
+    before it — whether they were set or unset before, and also when
+    start() itself raises (complete mode without an aggregation)."""
+    from pyspark.errors import AnalysisException
+
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    keys = (_SHUFFLE, _PROVIDER)
+    saved = {k: spark.conf.get(k, None) for k in keys}
+
+    def current():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    confs = {_SHUFFLE: "3", _PROVIDER: _STATE_PKG + "RocksDBStateStoreProvider"}
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        if preset:
+            spark.conf.set(_SHUFFLE, "7")
+            spark.conf.set(_PROVIDER, _STATE_PKG + "HDFSBackedStateStoreProvider")
+        before = current()
+        agg = _stream_events(spark, SF).groupBy("user_id").count()
+        run_available_now(
+            agg.writeStream.outputMode("update").format("noop"),
+            str(tmp_path / "ok"), "runner_conf_ok", confs,
+        )
+        assert current() == before
+
+        bad = _stream_events(spark, SF).select("user_id")
+        with pytest.raises(AnalysisException, match="(?i)complete"):
+            run_available_now(
+                bad.writeStream.outputMode("complete").format("noop"),
+                str(tmp_path / "bad"), "runner_conf_bad", confs,
+            )
+        assert current() == before
+        assert spark.streams.active == []
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_statestore_read_leaves_no_temp_view(spark):
+    """statestore_read reads its state from the checkpoint and runs its
+    stream to a noop sink: rebuilding it registers no sink table."""
+    from dpu_olap_spark.registry import all_queries
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for _ in range(3):
+        all_queries()["statestore_read"].build(spark, SF).collect()
+    assert temp_views() - before == set()
+
+
+def _stream_runner_calls(path):
+    """(call, line) for each call in a module that starts, triggers or
+    awaits a stream by hand: .awaitTermination(...), .trigger(...) or
+    .option("checkpointLocation", ...)."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    calls = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        attr = node.func.attr
+        ckpt_option = attr == "option" and node.args and (
+            isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "checkpointLocation"
+        )
+        if attr in ("awaitTermination", "trigger") or ckpt_option:
+            calls.append((attr, node.lineno))
+    return calls
+
+
+def test_every_finite_stream_goes_through_the_runner():
+    """Only sources/tables.py starts a finite stream by hand, and it does
+    so once (run_available_now): any other module that sets a
+    checkpoint, a trigger or awaits a stream has re-grown its own
+    runner."""
+    import glob
+
+    import dpu_olap_spark
+
+    root = os.path.dirname(dpu_olap_spark.__file__)
+    runner = os.path.join(root, "sources", "tables.py")
+    offenders = {}
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        if path != runner and (calls := _stream_runner_calls(path)):
+            offenders[os.path.relpath(path, root)] = calls
+    assert offenders == {}
+    assert sorted(a for a, _ in _stream_runner_calls(runner)) == [
+        "awaitTermination", "option", "trigger",
+    ]
