@@ -19,6 +19,8 @@ them launches no Spark job.
 
 from __future__ import annotations
 
+import itertools
+import os
 import threading
 
 import pyarrow.parquet as pq
@@ -33,7 +35,12 @@ from dpu_olap_spark.functions.vectors import (
     sign_bucket_value,
 )
 from dpu_olap_spark.registry import query
-from dpu_olap_spark.sources.tables import fingerprint, load_table, table_path
+from dpu_olap_spark.sources.tables import (
+    fingerprint,
+    load_table,
+    swap_live_dir,
+    table_path,
+)
 
 _QUERY_VEC_ID = 0
 _TOP_K = 20
@@ -744,18 +751,19 @@ def _best_code_struct(books, seg: int) -> F.Column:
 # touch the embeddings again; encode cost is paid once at index-build
 # time, exactly as a real ANN service does it. Each entry is
 # sf_dir -> (embeddings fingerprint, index path): an embeddings file
-# rewritten at the same path rebuilds the index.
+# rewritten at the same path rebuilds the index at a new path, and the
+# index it replaced is retired (`tables.swap_live_dir`).
 _PQ_INDEX_CACHE: dict[str, tuple[tuple, str]] = {}
 _PQ_INDEX_LOCK = threading.Lock()
+_pq_index_counter = itertools.count()
 
 
 def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     with _PQ_INDEX_LOCK:
         fp = fingerprint(table_path(sf_dir, "embeddings"))
         hit = _PQ_INDEX_CACHE.get(sf_dir)
-        if hit is not None and hit[0] == fp:
+        if hit is not None and hit[0] == fp and os.path.isdir(hit[1]):
             return hit[1]
-        import os
         import tempfile
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -774,7 +782,8 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
             os.path.abspath(os.path.normpath(sf_dir)).encode()
         ).hexdigest()[:12]
         path = os.path.join(
-            tempfile.gettempdir(), f"pq_index_{os.getpid()}_{tag}"
+            tempfile.gettempdir(),
+            f"pq_index_{os.getpid()}_{tag}_{next(_pq_index_counter)}",
         )
         def build_index(batches):
             import numpy as np
@@ -812,6 +821,7 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
+        swap_live_dir(f"pq_index_{tag}", path)
         _PQ_INDEX_CACHE[sf_dir] = (fp, path)
         return path
 

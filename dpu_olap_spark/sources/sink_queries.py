@@ -15,9 +15,10 @@ deployment lives or dies:
 - CSV/JSON/ORC -> interchange, always schema-explicit (inferSchema
   would add a read pass and invite drift).
 
-Sink directories are per-process temp paths; bucketed tables get
-unique names and are dropped after the read so repeated driver runs
-don't collide or accumulate state.
+Sink directories are per-build temp paths, retired by the next build
+of the same sink and deleted by the third or at process exit;
+bucketed tables get unique names and are dropped after the read so
+repeated driver runs don't collide or accumulate state.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources import sinks
-from dpu_olap_spark.sources.tables import load_table
+from dpu_olap_spark.sources.tables import load_table, swap_live_dir
 
 _run_counter = itertools.count()
 
@@ -44,9 +45,13 @@ _SINK_PATHS: dict[str, str] = {}
 
 
 def _tmp_path(tag: str) -> str:
-    return os.path.join(
+    """A fresh output directory for this build, made the live one for
+    ``tag`` (the previous build's is retired, ``tables.swap_live_dir``)."""
+    path = os.path.join(
         tempfile.gettempdir(), f"sinkq_{tag}_{os.getpid()}_{next(_run_counter)}"
     )
+    swap_live_dir(f"sinkq_{tag}", path)
+    return path
 
 
 @query(

@@ -20,14 +20,19 @@ The module also owns the engine's one runner for finite streams
 (`run_available_now`): every availableNow stream, whatever its sink,
 is started, awaited and stopped there, with its confs set and restored
 under one lock, and raises if it does not finish in time.
-`run_to_memory_sink` is the memory-sink front end to it.
+`run_to_memory_sink` is the memory-sink front end to it. The output
+directories builders leave behind (state checkpoints, sink outputs, the
+PQ index) are retired and deleted through `swap_live_dir`.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
+import shutil
 import threading
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -207,16 +212,22 @@ STATE_PARTITIONS_DEFAULT = 8
 # state partitions when per-partition overhead dominates): a
 # symmetric stream-stream join commits FOUR state stores per
 # partition per batch (left/right x keyToNumValues/keyWithIndex), and
-# the per-store commit cost is FIXED (~100ms task time even for a
-# 63-row batch — measured via StreamingQueryProgress commitTimeMs),
-# so at fixture volumes the 8-partition floor pays 4x8 store commits
-# per batch for ~40k state rows.  Sweep on the registered interval
-# join at sf0.1 (200k events, identical 183 emitted rows at every
-# setting): p8 3.4s / p4 2.1s / p2 1.9s / p1 2.0s medians — the knee
-# is 4.  The JOIN floor therefore drops to 4; the single-store
-# AGG queries keep STATE_PARTITIONS_DEFAULT=8 (their sweep showed
-# p2 = 5.0s vs p8 = 3.1s: pandas-worker parallelism dominates there).
-# At replay scale nothing changes: rows/300k takes over above 1.2M.
+# each store commit paid a near-fixed cost (~100ms task time even for
+# a 63-row batch, via StreamingQueryProgress commitTimeMs), so at
+# fixture volumes the 8-partition floor paid 4x8 store commits per
+# batch for ~40k state rows.  Sweep on the registered interval join at
+# sf0.1 (200k events, identical 183 emitted rows at every setting):
+# p8 3.4s / p4 2.1s / p2 1.9s / p1 2.0s medians — the knee was 4.
+# Most of that per-store cost was not the store itself but processes
+# forked by Hadoop's local filesystem without its native library: a
+# `readlink` for each side of every checkpoint rename and a `chmod`
+# for each created file.  Local checkpoints now rename without forking
+# (run_available_now), and `chmod` still forks; the knees (4 here, 8
+# for the Python-state AGG queries) were measured with the forks and
+# are not re-tuned.  The single-store AGG queries keep
+# STATE_PARTITIONS_DEFAULT=8 (their sweep showed p2 = 5.0s vs
+# p8 = 3.1s: pandas-worker parallelism dominates there).  At replay
+# scale nothing changes: rows/300k takes over above 1.2M.
 JOIN_STATE_PARTITIONS_FLOOR = 4
 
 def replay_state_partitions(n_rows: int, cores: int) -> int:
@@ -227,8 +238,9 @@ def replay_state_partitions(n_rows: int, cores: int) -> int:
     At driver/bench fixture sizes (<= 1.2M events) the rule floors at
     4 — the r18 optimization-round knee (see the comment above
     JOIN_STATE_PARTITIONS_FLOOR): the join's 4-stores-per-partition
-    fixed commit cost made the old floor of 8 pay ~1s/query for no
-    parallelism gain at fixture volumes; emitted rows are invariant."""
+    commit cost, then mostly forked processes, made the old floor of 8
+    pay ~1s/query for no parallelism gain at fixture volumes; emitted
+    rows are invariant."""
     return max(
         JOIN_STATE_PARTITIONS_FLOOR,
         min(cores, n_rows // REPLAY_ROWS_PER_PARTITION),
@@ -250,10 +262,13 @@ def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     join streams.  r18 optimization-round measurement (identical
     output rows at every setting): a JVM agg stream over sf0.1's 200k
     events ran 0.63s at p8 vs 0.53s at p4; the doubled-stream dedup
-    (200k state keys) 0.93s at p8 vs 0.79s at p4 — the fixed
-    per-partition store-commit cost dominates under ~1.2M rows, so
-    the floor of 4 wins; above it the volume term takes over exactly
-    as for the joins.  Python-stateful streams
+    (200k state keys) 0.93s at p8 vs 0.79s at p4 — a per-partition
+    store-commit cost dominated under ~1.2M rows, so the floor of 4
+    won; above it the volume term takes over exactly as for the
+    joins.  That commit cost was mostly forked `readlink`/`chmod`
+    processes (see the comment above JOIN_STATE_PARTITIONS_FLOOR);
+    the readlinks are gone for local checkpoints, and the knee was
+    measured with them and is not re-tuned.  Python-stateful streams
     (applyInPandasWithState) deliberately KEEP state_partitions=8:
     their sweep showed p2 regressing 3.1s -> 5.0s because
     pandas-worker parallelism, not commit cost, dominates there."""
@@ -322,6 +337,45 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LIVE_SINKS: dict[str, str] = {}
 
+# Directories a builder writes and returns a lazy DataFrame over (state
+# checkpoints, sink outputs, the PQ index): one live directory per key.
+# A rebuild retires the previous one instead of deleting it at once, as
+# a prior DataFrame may still be unevaluated; a reader two rebuilds stale
+# has been evaluated or dropped, so only the newest RETIRED_KEEP retirees
+# per key are kept and older ones are deleted. The rest go at process
+# exit. Deletion is Python's rmtree: Spark's Utils.deleteRecursively
+# forks `rm -rf`.
+_LIVE_DIRS: dict[str, str] = {}
+_RETIRED_DIRS: dict[str, list[str]] = {}
+RETIRED_KEEP = 2
+_DIRS_LOCK = threading.Lock()
+
+
+def swap_live_dir(key: str, path: str) -> None:
+    """Record ``path`` as the live directory for ``key`` and retire the
+    previous one (deleted after RETIRED_KEEP newer retirements of the
+    same key, or at process exit, whichever comes first)."""
+    with _DIRS_LOCK:
+        old = _LIVE_DIRS.get(key)
+        _LIVE_DIRS[key] = path
+        if old is None:
+            return
+        retired = _RETIRED_DIRS.setdefault(key, [])
+        retired.append(old)
+        doomed = retired[:-RETIRED_KEEP]
+        del retired[:-RETIRED_KEEP]
+    for d in doomed:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@atexit.register
+def _remove_live_dirs() -> None:
+    # no reader outlives the interpreter, so every directory goes here
+    retired = [d for ds in _RETIRED_DIRS.values() for d in ds]
+    for d in [*_LIVE_DIRS.values(), *retired]:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 _STATE_CONF_LOCK = threading.Lock()
 
 # Python Data Source registration is NOT safe against concurrent
@@ -359,6 +413,30 @@ def register_python_sources_once(spark: SparkSession) -> None:
         _PY_SRC_REGISTERED[spark] = True
 
 
+# Spark's default checkpoint manager goes through Hadoop's FileContext,
+# whose rename-with-overwrite resolves both paths first; without the
+# native Hadoop library the local filesystem forks a `readlink` for each
+# (two per state-store delta, offset entry and commit entry). The
+# FileSystem-API manager renames a local file with File.renameTo, an
+# atomic POSIX rename that forks nothing. Spark still wraps it in its
+# checksum manager, so checkpoint checksums are written and verified.
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_confs(checkpoint: str) -> dict[str, str]:
+    """The confs a stream on ``checkpoint`` needs for its checkpoint
+    files: the FileSystem-API manager for a local path (bare or
+    ``file:``), none for a remote one (``hdfs://``, ``s3a://``, ...),
+    which keeps Spark's default."""
+    if urlparse(checkpoint).scheme in ("", "file"):
+        return {_CHECKPOINT_MANAGER_CONF: _LOCAL_CHECKPOINT_MANAGER}
+    return {}
+
+
 def run_available_now(
     writer,
     checkpoint: str,
@@ -380,9 +458,17 @@ def run_available_now(
     stream is stopped whatever happens, and a stream that did not
     finish in time raises — a timed-out stream would otherwise leave
     partial results behind.
+
+    A local checkpoint (a bare or ``file:`` path) is written through
+    the FileSystem-API checkpoint manager (``_checkpoint_confs``),
+    which renames without forking a process; remote ones keep Spark's
+    default. That manager's no-overwrite create checks ``exists`` and
+    then renames, so it does not guard against a second concurrent
+    writer. Every checkpoint in the engine has one writer: a private
+    ``mkdtemp`` or ``TemporaryDirectory``, or a caller-owned path.
     """
     spark = writer._spark
-    confs = confs or {}
+    confs = {**(confs or {}), **_checkpoint_confs(checkpoint)}
     with _STATE_CONF_LOCK:
         prev = {k: spark.conf.get(k, None) for k in confs}
         try:

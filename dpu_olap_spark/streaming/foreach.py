@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
-from dpu_olap_spark.sources.tables import load_events_stream, run_available_now
+from dpu_olap_spark.sources.tables import (
+    load_events_stream,
+    run_available_now,
+    swap_live_dir,
+)
 
 _run_counter = itertools.count()
 
@@ -69,6 +73,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(
         tempfile.gettempdir(), f"feb_sink_{os.getpid()}_{next(_run_counter)}"
     )
+    swap_live_dir("feb_sink", out)
     stream = load_events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     run_foreach_batch_parquet(stream, out)
     sunk = spark.read.parquet(out)

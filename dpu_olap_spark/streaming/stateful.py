@@ -27,7 +27,6 @@ interleaving. Arrow batches keep the Python hop amortized.
 
 from __future__ import annotations
 
-import atexit
 import itertools
 import os
 import shutil
@@ -51,6 +50,7 @@ from dpu_olap_spark.sources.tables import (
     load_table,
     run_available_now,
     run_to_memory_sink,
+    swap_live_dir,
 )
 
 _sink_counter = itertools.count()
@@ -470,46 +470,6 @@ def q_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The state-reader queries keep one LIVE checkpoint per key; rebuilds
-# retire the previous one to a process-exit cleanup list instead of
-# rmtree-ing it immediately — the returned DataFrame is lazy over the
-# checkpoint, so rebuild-time deletion races a concurrent or
-# still-unevaluated prior read (same hazard class as pysink_write;
-# r6 ADVICE item).
-_SS_CKPT: dict[str, str] = {}
-_SS_RETIRED: dict[str, list[str]] = {}
-# How many retired generations to keep per key before eager deletion.
-# Deferred deletion exists because the returned DataFrame is lazy over
-# the checkpoint; a reader two rebuilds stale has necessarily been
-# evaluated or dropped by the caller, so bounding the list at 2 keeps
-# the race fix while capping tempdir growth in long bench loops
-# (high SPARK_GRAFT_BENCH_RUNS; r7 ADVICE).
-_SS_RETIRED_KEEP = 2
-
-
-def _swap_ckpt(key: str, ckpt: str) -> None:
-    """Record `ckpt` as the live checkpoint for `key`; retire the
-    previous one (deleted after _SS_RETIRED_KEEP newer retirements of
-    the same key, or at process exit, whichever comes first)."""
-    old = _SS_CKPT.pop(key, None)
-    if old is not None:
-        retired = _SS_RETIRED.setdefault(key, [])
-        retired.append(old)
-        while len(retired) > _SS_RETIRED_KEEP:
-            shutil.rmtree(retired.pop(0), ignore_errors=True)
-    _SS_CKPT[key] = ckpt
-
-
-@atexit.register
-def _cleanup_checkpoints() -> None:
-    # retired state-reader checkpoints (replaced by a rebuild) and the
-    # final live ones: no reader can outlive the interpreter, so both
-    # are safe to remove here and only here
-    retired = [d for lst in _SS_RETIRED.values() for d in lst]
-    for d in retired + list(_SS_CKPT.values()):
-        shutil.rmtree(d, ignore_errors=True)
-
-
 # The provider swap and changelog flag a deployment flips for RocksDB
 # state; changelog checkpointing is also what makes the change feed
 # readable.
@@ -537,7 +497,7 @@ def _run_for_state(
     confs = {"spark.sql.shuffle.partitions": str(state_partitions), **(extra_confs or {})}
     writer = stream_df.writeStream.outputMode(output_mode).format("noop")
     run_available_now(writer, ckpt, name, confs)
-    _swap_ckpt(key, ckpt)
+    swap_live_dir(key, ckpt)
     return ckpt
 
 
@@ -570,7 +530,7 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py asserts lists this operator). The
     stream runs to a noop sink (the reader needs only its checkpoint,
     so no sink table is registered); the checkpoint persists for the
-    read, one live per process, retired on rebuild (`_swap_ckpt`)."""
+    read, one live per process, retired on rebuild (`tables.swap_live_dir`)."""
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     ckpt = _run_for_state(

@@ -311,3 +311,24 @@ def test_zorder_prunes_both_dimensions(spark):
     assert total >= 8, f"too few files for a meaningful pruning test: {total}"
     assert part_files <= total // 2, (part_files, total)
     assert supp_files <= total // 2, (supp_files, total)
+
+
+def test_sink_builds_retire_old_output_dirs(spark):
+    """Each sink_zorder build writes a fresh directory and retires the
+    previous one: after five builds at most three of this process's
+    directories are left (the live one and two retirees), and the
+    published path is the live one."""
+    import glob
+    import os
+    import tempfile
+
+    from dpu_olap_spark.registry import all_queries
+    from dpu_olap_spark.sources.sink_queries import _SINK_PATHS
+
+    for _ in range(5):
+        all_queries()["sink_zorder"].build(spark, SF).collect()
+    mine = glob.glob(
+        os.path.join(tempfile.gettempdir(), f"sinkq_li_zorder_{os.getpid()}_*")
+    )
+    assert 1 <= len(mine) <= 3, mine
+    assert os.path.isdir(_SINK_PATHS["sink_zorder"])

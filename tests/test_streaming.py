@@ -466,13 +466,13 @@ def test_statestore_metadata_lists_aggregation(spark):
     the query pinned — the discovery half of the state-reader
     surface."""
     from dpu_olap_spark.registry import all_queries
-    from dpu_olap_spark.streaming.stateful import _SS_CKPT
+    from dpu_olap_spark.sources.tables import _LIVE_DIRS
 
     from dpu_olap_spark.sources.tables import events_state_partitions
 
     all_queries()["statestore_read"].build(spark, "/root/testdata/sf0.001").collect()
     expected = events_state_partitions(spark, "/root/testdata/sf0.001")
-    md = spark.read.format("state-metadata").load(_SS_CKPT["ckpt"]).collect()
+    md = spark.read.format("state-metadata").load(_LIVE_DIRS["ckpt"]).collect()
     ops = {r.operatorName for r in md}
     assert "stateStoreSave" in ops, ops
     assert all(r.numPartitions == expected for r in md)
@@ -524,7 +524,7 @@ def test_session_state_reader_matches_batch_sessionization(spark):
     from pyspark.sql import functions as F
 
     from dpu_olap_spark.registry import all_queries
-    from dpu_olap_spark.streaming.stateful import _SS_CKPT
+    from dpu_olap_spark.sources.tables import _LIVE_DIRS
 
     state = all_queries()["statestore_session_read"].build(
         spark, "/root/testdata/sf0.001"
@@ -533,7 +533,7 @@ def test_session_state_reader_matches_batch_sessionization(spark):
 
     from dpu_olap_spark.sources.tables import events_state_partitions
 
-    md = spark.read.format("state-metadata").load(_SS_CKPT["sess_ckpt"]).collect()
+    md = spark.read.format("state-metadata").load(_LIVE_DIRS["sess_ckpt"]).collect()
     ops = {r.operatorName for r in md}
     assert "sessionWindowStateStoreSaveExec" in ops, ops
     expected = events_state_partitions(spark, "/root/testdata/sf0.001")
@@ -606,29 +606,28 @@ def test_cogroup_asof_handles_one_sided_keys(spark):
 
 
 def test_retired_checkpoints_bounded_per_key(tmp_path):
-    """The r8 ADVICE fix: _swap_ckpt keeps at most _SS_RETIRED_KEEP
-    retired checkpoint dirs per key, eagerly deleting older ones, so
-    long bench loops (high SPARK_GRAFT_BENCH_RUNS) cannot grow
+    """tables.swap_live_dir keeps at most RETIRED_KEEP retired dirs per
+    key, eagerly deleting older ones, so long bench loops cannot grow
     tempdir usage without bound — while the most recent retirees
     survive for any still-lazy reader. Pure bookkeeping, no Spark."""
-    from dpu_olap_spark.streaming import stateful
+    from dpu_olap_spark.sources import tables
 
-    saved_ckpt = dict(stateful._SS_CKPT)
-    saved_retired = {k: list(v) for k, v in stateful._SS_RETIRED.items()}
-    stateful._SS_CKPT.clear()
-    stateful._SS_RETIRED.clear()
+    saved_live = dict(tables._LIVE_DIRS)
+    saved_retired = {k: list(v) for k, v in tables._RETIRED_DIRS.items()}
+    tables._LIVE_DIRS.clear()
+    tables._RETIRED_DIRS.clear()
     try:
         dirs = []
         for i in range(6):
             d = tmp_path / f"ckpt_{i}"
             d.mkdir()
             dirs.append(str(d))
-            stateful._swap_ckpt("k", str(d))
-        keep = stateful._SS_RETIRED_KEEP
-        retired = stateful._SS_RETIRED["k"]
+            tables.swap_live_dir("k", str(d))
+        keep = tables.RETIRED_KEEP
+        retired = tables._RETIRED_DIRS["k"]
         # live = dirs[5]; retired list holds the newest `keep` retirees
         assert retired == dirs[5 - keep : 5]
-        assert stateful._SS_CKPT["k"] == dirs[5]
+        assert tables._LIVE_DIRS["k"] == dirs[5]
         import os
 
         for d in dirs[: 5 - keep]:
@@ -636,10 +635,10 @@ def test_retired_checkpoints_bounded_per_key(tmp_path):
         for d in dirs[5 - keep :]:
             assert os.path.exists(d), f"recent dir {d} wrongly deleted"
     finally:
-        stateful._SS_CKPT.clear()
-        stateful._SS_CKPT.update(saved_ckpt)
-        stateful._SS_RETIRED.clear()
-        stateful._SS_RETIRED.update(saved_retired)
+        tables._LIVE_DIRS.clear()
+        tables._LIVE_DIRS.update(saved_live)
+        tables._RETIRED_DIRS.clear()
+        tables._RETIRED_DIRS.update(saved_retired)
 
 
 def test_stream_histogram_pctl_state_bounded_and_batch_exact(spark):
@@ -1012,6 +1011,92 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
 _SHUFFLE = "spark.sql.shuffle.partitions"
 _PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 _STATE_PKG = "org.apache.spark.sql.execution.streaming.state."
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+@pytest.mark.parametrize(
+    "checkpoint, local",
+    [
+        ("/tmp/ckpt", True),
+        ("relative/ckpt", True),
+        ("file:/tmp/ckpt", True),
+        ("file:///tmp/ckpt", True),
+        ("hdfs://nn/x", False),
+        ("s3a://b/x", False),
+    ],
+    ids=["bare", "relative", "file_path", "file_url", "hdfs", "s3a"],
+)
+def test_checkpoint_confs_override_only_local_paths(checkpoint, local):
+    """A local checkpoint gets the FileSystem-API manager; a remote one
+    keeps Spark's default (no override)."""
+    from dpu_olap_spark.sources.tables import _checkpoint_confs
+
+    expected = (
+        {_CKPT_MANAGER: _CKPT_PKG + "FileSystemBasedCheckpointFileManager"}
+        if local
+        else {}
+    )
+    assert _checkpoint_confs(checkpoint) == expected
+
+
+def _process_starts(spark, fn):
+    """Counter of the command lines of every process the driver JVM
+    starts while ``fn()`` runs: a JFR recording with only
+    jdk.ProcessStart enabled, read back with RecordingFile."""
+    from collections import Counter
+
+    jvm = spark._jvm
+    no_more = spark.sparkContext._gateway.new_array(jvm.String, 0)
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        fn()
+    finally:
+        rec.stop()
+    try:
+        with tempfile.TemporaryDirectory() as d:
+            dump = jvm.java.nio.file.Paths.get(os.path.join(d, "rec.jfr"), no_more)
+            rec.dump(dump)
+            events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+            return Counter(e.getString("command") for e in events)
+    finally:
+        rec.close()
+
+
+def test_local_checkpoint_renames_fork_no_readlink(spark, tmp_path):
+    """An aggregation stream through the runner on a local checkpoint
+    forks no `readlink` for its offset, commit or state files: the
+    FileSystem-API manager renames without resolving paths, where
+    Spark's default FileContext manager forks two per rename when the
+    native Hadoop library is absent. The file source's own log under
+    sources/ is built from the caller's session and is not counted."""
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    ckpt = str(tmp_path / "ckpt")
+    agg = _stream_events(spark, SF).groupBy("user_id").count()
+    jvm = spark._jvm
+
+    def run():
+        run_available_now(
+            agg.writeStream.outputMode("update").format("noop"),
+            ckpt, "fork_count_probe", {_SHUFFLE: "4"},
+        )
+        # a known process start: proves the recording sees them
+        marker = spark.sparkContext._gateway.new_array(jvm.String, 1)
+        marker[0] = "true"
+        jvm.java.lang.ProcessBuilder(marker).start().waitFor()
+
+    forks = _process_starts(spark, run)
+    assert forks["true"] == 1, forks
+    assert os.path.isdir(os.path.join(ckpt, "state"))
+    readlinks = [
+        cmd for cmd in forks.elements()
+        if cmd.startswith("readlink ")
+        and any(f"{ckpt}/{sub}/" in cmd for sub in ("offsets", "commits", "state"))
+    ]
+    assert readlinks == [], readlinks
 
 
 def test_runner_timeout_raises_naming_the_stream(spark, tmp_path):
@@ -1030,14 +1115,15 @@ def test_runner_timeout_raises_naming_the_stream(spark, tmp_path):
 
 @pytest.mark.parametrize("preset", [False, True], ids=["unset_before", "set_before"])
 def test_runner_restores_confs(spark, tmp_path, preset):
-    """The confs the runner sets for planning read the same afterwards as
-    before it — whether they were set or unset before, and also when
-    start() itself raises (complete mode without an aggregation)."""
+    """The confs the runner sets for planning, and the checkpoint manager
+    it sets for a local checkpoint, read the same afterwards as before
+    it — whether they were set or unset before, and also when start()
+    itself raises (complete mode without an aggregation)."""
     from pyspark.errors import AnalysisException
 
     from dpu_olap_spark.sources.tables import run_available_now
 
-    keys = (_SHUFFLE, _PROVIDER)
+    keys = (_SHUFFLE, _PROVIDER, _CKPT_MANAGER)
     saved = {k: spark.conf.get(k, None) for k in keys}
 
     def current():
@@ -1050,6 +1136,7 @@ def test_runner_restores_confs(spark, tmp_path, preset):
         if preset:
             spark.conf.set(_SHUFFLE, "7")
             spark.conf.set(_PROVIDER, _STATE_PKG + "HDFSBackedStateStoreProvider")
+            spark.conf.set(_CKPT_MANAGER, _CKPT_PKG + "FileContextBasedCheckpointFileManager")
         before = current()
         agg = _stream_events(spark, SF).groupBy("user_id").count()
         run_available_now(

@@ -101,7 +101,7 @@ def test_changefeed_history_is_monotone(spark):
     """The change feed's per-key value history must be monotonically
     non-decreasing counts (update-mode counting never shrinks) and end
     at the final aggregate — the audit property the feed exists for."""
-    from dpu_olap_spark.streaming.stateful import _SS_CKPT
+    from dpu_olap_spark.sources.tables import _LIVE_DIRS
 
     final = {
         (r.user_id): r.n_events
@@ -111,7 +111,7 @@ def test_changefeed_history_is_monotone(spark):
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
         .option("changeStartBatchId", "0")
-        .load(_SS_CKPT["cf_ckpt"])
+        .load(_LIVE_DIRS["cf_ckpt"])
         .select(
             F.col("batch_id"),
             F.col("key.user_id").alias("user_id"),
