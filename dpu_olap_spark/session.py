@@ -51,6 +51,8 @@ _CONFS: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
 
+_NOFORK_FS = "dpu_olap_spark.jvm.NoForkLocalFileSystem"
+
 # Static confs: only applicable at JVM launch (tune() on a running
 # session skips them via its try/except). local[32] defaults to a 1 GiB
 # driver heap, which in local mode is ALSO all 32 executor threads'
@@ -58,6 +60,19 @@ _CONFS: dict[str, str] = {
 # scale. On a cluster this is spark.executor.memory sizing instead.
 _STATIC_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # Without the native Hadoop library, Hadoop's local file system
+    # forks a `chmod` for every file and directory it creates and a
+    # `readlink` for every FileContext rename; jvm/ holds a local file
+    # system that makes the same system calls through java.nio (its
+    # source beside the jar; tests/test_local_fs.py prints the rebuild
+    # command). The jar must be on the classpath when the JVM starts, so
+    # the binding is static: tune() never sets it, and a session built
+    # elsewhere keeps Hadoop's binding.
+    "spark.driver.extraClassPath": os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "jvm", "nofork-localfs.jar"
+    ),
+    "spark.hadoop.fs.file.impl": _NOFORK_FS,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": _NOFORK_FS + "$Fs",
 }
 
 

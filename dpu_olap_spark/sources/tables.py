@@ -222,9 +222,10 @@ STATE_PARTITIONS_DEFAULT = 8
 # forked by Hadoop's local filesystem without its native library: a
 # `readlink` for each side of every checkpoint rename and a `chmod`
 # for each created file.  Local checkpoints now rename without forking
-# (run_available_now), and `chmod` still forks; the knees (4 here, 8
-# for the Python-state AGG queries) were measured with the forks and
-# are not re-tuned.  The single-store AGG queries keep
+# (run_available_now), and the engine's sessions create files without
+# forking (session.py binds the "file" scheme to NoForkLocalFileSystem);
+# the knees (4 here, 8 for the Python-state AGG queries) were measured
+# with the forks and are not re-tuned.  The single-store AGG queries keep
 # STATE_PARTITIONS_DEFAULT=8 (their sweep showed p2 = 5.0s vs
 # p8 = 3.1s: pandas-worker parallelism dominates there).  At replay
 # scale nothing changes: rows/300k takes over above 1.2M.
@@ -267,11 +268,12 @@ def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     won; above it the volume term takes over exactly as for the
     joins.  That commit cost was mostly forked `readlink`/`chmod`
     processes (see the comment above JOIN_STATE_PARTITIONS_FLOOR);
-    the readlinks are gone for local checkpoints, and the knee was
-    measured with them and is not re-tuned.  Python-stateful streams
-    (applyInPandasWithState) deliberately KEEP state_partitions=8:
-    their sweep showed p2 regressing 3.1s -> 5.0s because
-    pandas-worker parallelism, not commit cost, dominates there."""
+    in the engine's sessions both are gone for local checkpoints, and
+    the knee was measured with them and is not re-tuned.
+    Python-stateful streams (applyInPandasWithState) deliberately KEEP
+    state_partitions=8: their sweep showed p2 regressing 3.1s -> 5.0s
+    because pandas-worker parallelism, not commit cost, dominates
+    there."""
     return join_replay_partitions(spark, sf_dir)
 
 
@@ -420,6 +422,9 @@ def register_python_sources_once(spark: SparkSession) -> None:
 # FileSystem-API manager renames a local file with File.renameTo, an
 # atomic POSIX rename that forks nothing. Spark still wraps it in its
 # checksum manager, so checkpoint checksums are written and verified.
+# Sessions from session.get_spark bind FileContext's "file" scheme to a
+# local file system that reads links without forking; this override
+# still serves sessions the engine did not build (the driver's own).
 _LOCAL_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"

@@ -332,3 +332,28 @@ def test_sink_builds_retire_old_output_dirs(spark):
     )
     assert 1 <= len(mine) <= 3, mine
     assert os.path.isdir(_SINK_PATHS["sink_zorder"])
+
+
+def test_sink_build_forks_no_chmod(spark):
+    """A sink_zorder build writes parquet part files, their `.crc`
+    sidecars and the committer's directories without forking `chmod`:
+    the engine's session binds the "file" scheme to
+    NoForkLocalFileSystem, which sets modes through java.nio. Hadoop's
+    own local file system forks one `chmod` per created file and
+    directory without its native library (54 per build). The build is
+    warmed first: a session's first task fetches the shipped package
+    and Spark marks it executable with a forked `chmod a+x`."""
+    from dpu_olap_spark.registry import all_queries
+    from dpu_olap_spark.sources.sink_queries import _SINK_PATHS
+    from tests.jfr import commands, process_starts, start_marker
+
+    def run():
+        all_queries()["sink_zorder"].build(spark, SF).collect()
+        start_marker(spark)
+
+    run()
+    forks = process_starts(spark, run)
+    assert forks["true"] == 1, forks
+    written = os.listdir(_SINK_PATHS["sink_zorder"])
+    assert any(f.endswith(".parquet.crc") for f in written), written
+    assert commands(forks, "chmod") == []

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from dpu_olap_spark.sources.tables import load_table
 from dpu_olap_spark.streaming.windows import tumbling_agg
+from tests.jfr import commands, process_starts as _process_starts, start_marker
 
 SF = "/root/testdata/sf0.001"
 
@@ -1040,31 +1041,6 @@ def test_checkpoint_confs_override_only_local_paths(checkpoint, local):
     assert _checkpoint_confs(checkpoint) == expected
 
 
-def _process_starts(spark, fn):
-    """Counter of the command lines of every process the driver JVM
-    starts while ``fn()`` runs: a JFR recording with only
-    jdk.ProcessStart enabled, read back with RecordingFile."""
-    from collections import Counter
-
-    jvm = spark._jvm
-    no_more = spark.sparkContext._gateway.new_array(jvm.String, 0)
-    rec = jvm.jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    try:
-        fn()
-    finally:
-        rec.stop()
-    try:
-        with tempfile.TemporaryDirectory() as d:
-            dump = jvm.java.nio.file.Paths.get(os.path.join(d, "rec.jfr"), no_more)
-            rec.dump(dump)
-            events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
-            return Counter(e.getString("command") for e in events)
-    finally:
-        rec.close()
-
-
 def test_local_checkpoint_renames_fork_no_readlink(spark, tmp_path):
     """An aggregation stream through the runner on a local checkpoint
     forks no `readlink` for its offset, commit or state files: the
@@ -1097,6 +1073,36 @@ def test_local_checkpoint_renames_fork_no_readlink(spark, tmp_path):
         and any(f"{ckpt}/{sub}/" in cmd for sub in ("offsets", "commits", "state"))
     ]
     assert readlinks == [], readlinks
+
+
+def test_local_stream_forks_no_chmod_or_readlink(spark, tmp_path):
+    """An aggregation stream through the runner on a local checkpoint
+    forks neither `chmod` nor `readlink`, the file source's log
+    included: the engine's session binds the "file" scheme to
+    NoForkLocalFileSystem for both the FileSystem and the FileContext
+    API, which set modes and read links through java.nio. Hadoop's own
+    local file system forks about 40 `chmod` per such stream without
+    its native library."""
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    ckpt = str(tmp_path / "ckpt")
+    agg = _stream_events(spark, SF).groupBy("user_id").count()
+
+    def run():
+        run_available_now(
+            agg.writeStream.outputMode("update").format("noop"),
+            ckpt, "nofork_probe", {_SHUFFLE: "4"},
+        )
+        start_marker(spark)
+
+    # a session's first task fetches the shipped package and Spark
+    # marks it executable with a forked `chmod a+x`
+    spark.range(1).count()
+    forks = _process_starts(spark, run)
+    assert forks["true"] == 1, forks
+    assert os.path.isdir(os.path.join(ckpt, "sources"))
+    assert commands(forks, "chmod") == []
+    assert commands(forks, "readlink") == []
 
 
 def test_runner_timeout_raises_naming_the_stream(spark, tmp_path):
