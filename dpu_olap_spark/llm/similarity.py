@@ -19,7 +19,6 @@ them launches no Spark job.
 
 from __future__ import annotations
 
-import itertools
 import os
 import threading
 
@@ -37,8 +36,8 @@ from dpu_olap_spark.functions.vectors import (
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     fingerprint,
+    live_dir,
     load_table,
-    swap_live_dir,
     table_path,
 )
 
@@ -752,10 +751,9 @@ def _best_code_struct(books, seg: int) -> F.Column:
 # time, exactly as a real ANN service does it. Each entry is
 # sf_dir -> (embeddings fingerprint, index path): an embeddings file
 # rewritten at the same path rebuilds the index at a new path, and the
-# index it replaced is retired (`tables.swap_live_dir`).
+# index it replaced is retired (`tables.live_dir`).
 _PQ_INDEX_CACHE: dict[str, tuple[tuple, str]] = {}
 _PQ_INDEX_LOCK = threading.Lock()
-_pq_index_counter = itertools.count()
 
 
 def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -764,8 +762,6 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
         hit = _PQ_INDEX_CACHE.get(sf_dir)
         if hit is not None and hit[0] == fp and os.path.isdir(hit[1]):
             return hit[1]
-        import tempfile
-
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = {
             c: [float(x) for x in v]
@@ -773,18 +769,16 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
         }
         books = [(c, vecs[c]) for c in sorted(vecs) if c < _PQ_CODES]
         cents = [(c, vecs[c]) for c in sorted(vecs) if c < _N_CENTROIDS]
-        # tag by a hash of the FULL normalized sf_dir, not its basename:
-        # two sf_dirs sharing a basename in one process must not write
-        # to (and silently clobber) the same index path (r5 ADVICE)
+        # key the live index by a hash of the FULL normalized sf_dir:
+        # each sf_dir keeps its own live index, and two sharing a
+        # basename must not retire each other's
         import hashlib
 
         tag = hashlib.md5(
             os.path.abspath(os.path.normpath(sf_dir)).encode()
         ).hexdigest()[:12]
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"pq_index_{os.getpid()}_{tag}_{next(_pq_index_counter)}",
-        )
+        path = live_dir(f"pq_index_{tag}")
+
         def build_index(batches):
             import numpy as np
             import pandas as pd
@@ -821,7 +815,6 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        swap_live_dir(f"pq_index_{tag}", path)
         _PQ_INDEX_CACHE[sf_dir] = (fp, path)
         return path
 

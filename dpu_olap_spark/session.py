@@ -158,17 +158,19 @@ def _ship_package(spark: SparkSession) -> None:
     import dpu_olap_spark — but the driver process may run from any
     cwd with the repo only on its own sys.path. Shipping a zip via
     addPyFile puts the package on every worker's path (works on a real
-    cluster, not just local mode)."""
+    cluster, not just local mode). The zip lives in a ``tables.live_dir``
+    directory, so it goes with the process."""
     sc = spark.sparkContext
     if getattr(sc, "_dpu_olap_spark_shipped", False):
         return
-    import tempfile
     import zipfile
 
+    from dpu_olap_spark.sources.tables import live_dir
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"dpu_olap_spark_pkg_{os.getpid()}.zip"
-    )
+    zdir = live_dir("dpu_olap_spark_pkg")
+    os.makedirs(zdir)
+    zpath = os.path.join(zdir, "dpu_olap_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             for fn in filenames:

@@ -116,29 +116,6 @@ def q_pysource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# pysink_write output dirs are cleaned at PROCESS EXIT, not on
-# rebuild: concurrent builds (bench's thread-pool phase) may still be
-# reading a prior build's committed files when a new build finishes,
-# so rebuild-time deletion raced readers into FileNotFound. The dirs
-# are tiny (aggregated CSV of the urgent slice); a bench process
-# accumulates a handful. The LAST dir is kept in _PYSINK_DIR for the
-# commit-protocol pytest.
-_PYSINK_DIR: dict[str, str] = {}
-_PYSINK_ALL_DIRS: list[str] = []
-
-
-def _cleanup_pysink_dirs() -> None:
-    import shutil
-
-    for d in _PYSINK_ALL_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-import atexit
-
-atexit.register(_cleanup_pysink_dirs)
-
-
 def _make_sink():
     """Python Data Source WRITER half (the reader half is
     SynthMetricsSource above): a CSV sink with the classic two-phase
@@ -251,14 +228,15 @@ def q_pysink_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back aggregation is ordinary partial+final over the CSV
     scan."""
     import os
-    import tempfile
 
-    from dpu_olap_spark.sources.tables import load_table
-
-    from dpu_olap_spark.sources.tables import register_python_sources_once
+    from dpu_olap_spark.sources.tables import (
+        live_dir,
+        load_table,
+        register_python_sources_once,
+    )
 
     register_python_sources_once(spark)
-    out_dir = tempfile.mkdtemp(prefix="pysink_write_")
+    out_dir = live_dir("pysink_write")
     urgent = (
         load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")
@@ -268,8 +246,6 @@ def q_pysink_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     urgent.write.format("pycsv_sink").mode("append").option("path", out_dir).save()
-    _PYSINK_DIR["dir"] = out_dir
-    _PYSINK_ALL_DIRS.append(out_dir)
     back = spark.read.schema("o_orderkey bigint, cents bigint").csv(
         os.path.join(out_dir, "committed")
     )

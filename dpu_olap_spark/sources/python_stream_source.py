@@ -23,8 +23,6 @@ once across micro-batch and restart boundaries.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,8 +37,6 @@ _N_ROWS = 40_000
 _N_PARTS = 16
 _MULT = 2654435761  # Knuth multiplicative hash; exact in int64 here
 _MOD = 997
-
-_sink_counter = itertools.count()
 
 
 def _make_stream_source():
@@ -146,9 +142,8 @@ def q_pystream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped slices would shift counts and sums).
     tests/test_streaming.py additionally proves the RESUME property:
     a second run on the same checkpoint emits zero new rows."""
-    sink = f"pystream_scan_{next(_sink_counter)}"
     return (
-        run_to_memory_sink(_synth_stream(spark), sink, "append")
+        run_to_memory_sink(_synth_stream(spark), "pystream_scan", "append")
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -15,17 +15,16 @@ deployment lives or dies:
 - CSV/JSON/ORC -> interchange, always schema-explicit (inferSchema
   would add a read pass and invite drift).
 
-Sink directories are per-build temp paths, retired by the next build
-of the same sink and deleted by the third or at process exit;
-bucketed tables get unique names and are dropped after the read so
-repeated driver runs don't collide or accumulate state.
+Sink directories are per-build paths from `tables.live_dir`, retired
+by the next build of the same sink and deleted by the third or at
+process exit; bucketed tables get unique names (`tables.unique_name`)
+and are dropped after the read so repeated driver runs don't collide
+or accumulate state.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
-import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,25 +32,9 @@ from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources import sinks
-from dpu_olap_spark.sources.tables import load_table, swap_live_dir
-
-_run_counter = itertools.count()
+from dpu_olap_spark.sources.tables import live_dir, load_table, unique_name
 
 _CONF_LOCK = threading.Lock()
-
-# Most-recent published output path per sink query, for tests that
-# need to re-open the written files (avoids globbing a shared tempdir)
-_SINK_PATHS: dict[str, str] = {}
-
-
-def _tmp_path(tag: str) -> str:
-    """A fresh output directory for this build, made the live one for
-    ``tag`` (the previous build's is retired, ``tables.swap_live_dir``)."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"sinkq_{tag}_{os.getpid()}_{next(_run_counter)}"
-    )
-    swap_live_dir(f"sinkq_{tag}", path)
-    return path
 
 
 @query(
@@ -78,7 +61,7 @@ def q_sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    path = _tmp_path("orders_part")
+    path = live_dir("sinkq_orders_part")
     sinks.write_partitioned(orders, path, ["order_year"])
     back = sinks.read_partitioned(spark, path)
     return (
@@ -112,7 +95,7 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg so any row loss, duplication, or value mangling in the
     text round-trip breaks the hash."""
     nation = load_table(spark, sf_dir, "nation")
-    path = _tmp_path("nation_csv")
+    path = live_dir("sinkq_nation_csv")
     sinks.write_csv(nation, path)
     back = sinks.read_csv(spark, path, nation.schema)
     return back.groupBy("n_regionkey").agg(
@@ -136,7 +119,7 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated per nation. Decimal account balances survive the text
     representation exactly (decimal-typed schema on the read path)."""
     supplier = load_table(spark, sf_dir, "supplier")
-    path = _tmp_path("supp_json")
+    path = live_dir("sinkq_supp_json")
     sinks.write_json(supplier, path)
     back = sinks.read_json(spark, path, supplier.schema)
     return back.groupBy("s_nationkey").agg(
@@ -159,7 +142,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Part through an ORC sink (schema travels in the file footer) and
     back, aggregated per brand."""
     part = load_table(spark, sf_dir, "part")
-    path = _tmp_path("part_orc")
+    path = live_dir("sinkq_part_orc")
     sinks.write_orc(part, path)
     back = sinks.read_orc(spark, path)
     return back.groupBy("p_brand").agg(
@@ -186,7 +169,7 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-trip lossless; decimal sums follow the cast-before-sum
     discipline every other sink query uses."""
     customer = load_table(spark, sf_dir, "customer")
-    path = _tmp_path("cust_xml")
+    path = live_dir("sinkq_cust_xml")
     sinks.write_xml(customer, path)
     back = sinks.read_xml(spark, path, customer.schema)
     return back.groupBy("c_mktsegment").agg(
@@ -215,8 +198,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/host/join/join_dpu.cc:200-233), paid once at write
     time instead of per query. At 100 TB this is how repeated fact⋈dim
     joins on a stable key skip the shuffle entirely."""
-    run = next(_run_counter)
-    t_orders, t_customer = f"bq_orders_{run}", f"bq_customer_{run}"
+    t_orders, t_customer = unique_name("bq_orders"), unique_name("bq_customer")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     sinks.write_bucketed(orders, t_orders, "o_custkey", 8)
@@ -272,7 +254,7 @@ def q_sink_range_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_extendedprice"
     )
-    path = _tmp_path("li_range")
+    path = live_dir("sinkq_li_range")
     (
         li.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -320,7 +302,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     ev = load_table(spark, sf_dir, "events")
-    frag = _tmp_path("frag")
+    frag = live_dir("sinkq_frag")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
 
     fragmented = spark.read.schema(ev.schema).parquet(frag)
@@ -330,7 +312,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         if f.endswith(".parquet")
     )
     target_files = max(1, math.ceil(n_bytes / (128 << 20)))
-    compacted = _tmp_path("compact")
+    compacted = live_dir("sinkq_compact")
     fragmented.coalesce(target_files).write.mode("overwrite").parquet(compacted)
 
     out = spark.read.schema(ev.schema).parquet(compacted)
@@ -383,7 +365,7 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    path = _tmp_path("li_zorder")
+    path = live_dir("sinkq_li_zorder")
     # normalize both keys to a COMMON bit width before interleaving:
     # raw keys have unequal ranges (partkey ~20x suppkey), and the
     # wider key's high bits would dominate the Z top bits, collapsing
@@ -411,11 +393,6 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    # record the published path for tests (the _PYSINK_DIR pattern) —
-    # pruning tests read this instead of globbing the shared tempdir.
-    # Recorded AFTER the write succeeds so the dict never points at a
-    # missing/partial directory from a failed build (r7 ADVICE).
-    _SINK_PATHS["sink_zorder"] = path
     back = spark.read.schema(li.schema).parquet(path)
     return (
         back.where(F.col("l_partkey").between(100, 300))

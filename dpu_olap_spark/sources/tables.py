@@ -20,17 +20,26 @@ The module also owns the engine's one runner for finite streams
 (`run_available_now`): every availableNow stream, whatever its sink,
 is started, awaited and stopped there, with its confs set and restored
 under one lock, and raises if it does not finish in time.
-`run_to_memory_sink` is the memory-sink front end to it. The output
-directories builders leave behind (state checkpoints, sink outputs, the
-PQ index) are retired and deleted through `swap_live_dir`.
+`run_to_memory_sink` is the memory-sink front end to it.
+
+It is also the one owner of what a build leaves behind. Builders pass
+only a family or key: `unique_name` makes every per-build name
+(`<family>_<n>` from one counter; memory-sink tables, bucketed tables),
+and `live_dir(key)` hands out every output directory a build returns a
+DataFrame over (state checkpoints, sink outputs, the PQ index, the
+shipped package) under one per-process root made on first use. A key's
+previous directory is retired, the oldest retirees are deleted, and the
+root is removed at process exit.
 """
 
 from __future__ import annotations
 
 import atexit
 import glob
+import itertools
 import os
 import shutil
+import tempfile
 import threading
 from urllib.parse import urlparse
 
@@ -317,65 +326,88 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def raw_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema to hand a reader of ``path`` before any restoration:
+    from the footer (no job), or from Spark's inference (one job) when
+    the footer has a type `footer_schema` does not map (e.g.
+    TIMESTAMP(NANOS), read as a nano-epoch long)."""
+    schema = footer_schema(path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source for the events table: raw-schema file stream
     with the nano->micro restoration applied on the streaming DF.
-    Single point of truth for every streaming query and test. The raw
-    schema comes from the footer, or from a batch read when the footer
-    has a type `footer_schema` does not map (e.g. TIMESTAMP(NANOS),
-    read as a nano-epoch long)."""
+    Single point of truth for every streaming query and test."""
     path = table_path(sf_dir, "events")
-    raw_schema = footer_schema(path)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(path).schema
     return _restore_nano_ts(
         spark.readStream.format("parquet")
-        .schema(raw_schema)
+        .schema(raw_schema(spark, path))
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir),
         "events",
     )
 
 
+# --- what a build leaves behind ----------------------------------------------
+
+# One counter names every per-build resource: memory-sink tables, the
+# bucketed tables of bucketed_join, and output directories.
+_names = itertools.count()
+
+
+def unique_name(family: str) -> str:
+    """``<family>_<n>``, unique in this process."""
+    return f"{family}_{next(_names)}"
+
+
 _LIVE_SINKS: dict[str, str] = {}
 
 # Directories a builder writes and returns a lazy DataFrame over (state
-# checkpoints, sink outputs, the PQ index): one live directory per key.
-# A rebuild retires the previous one instead of deleting it at once, as
-# a prior DataFrame may still be unevaluated; a reader two rebuilds stale
-# has been evaluated or dropped, so only the newest RETIRED_KEEP retirees
-# per key are kept and older ones are deleted. The rest go at process
+# checkpoints, sink outputs, the PQ index, the shipped package): one
+# live directory per key, all under one per-process root. A rebuild
+# retires the previous one instead of deleting it at once, as a prior
+# DataFrame may still be unevaluated; a reader two rebuilds stale has
+# been evaluated or dropped, so only the newest RETIRED_KEEP retirees
+# per key are kept and older ones are deleted. The root goes at process
 # exit. Deletion is Python's rmtree: Spark's Utils.deleteRecursively
 # forks `rm -rf`.
+_ROOT: str | None = None
 _LIVE_DIRS: dict[str, str] = {}
 _RETIRED_DIRS: dict[str, list[str]] = {}
 RETIRED_KEEP = 2
 _DIRS_LOCK = threading.Lock()
 
 
-def swap_live_dir(key: str, path: str) -> None:
-    """Record ``path`` as the live directory for ``key`` and retire the
-    previous one (deleted after RETIRED_KEEP newer retirements of the
-    same key, or at process exit, whichever comes first)."""
+def live_dir(key: str) -> str:
+    """A fresh path ``<root>/<key>_<n>`` that does not exist yet, made
+    the live directory for ``key``; the previous one is retired (deleted
+    after RETIRED_KEEP newer retirements of the same key, or with the
+    root at process exit, whichever comes first). The root is made on
+    the first call, so importing this module creates nothing."""
+    global _ROOT
     with _DIRS_LOCK:
+        if _ROOT is None:
+            _ROOT = tempfile.mkdtemp(prefix="dpu_olap_spark_")
+        path = os.path.join(_ROOT, unique_name(key))
         old = _LIVE_DIRS.get(key)
         _LIVE_DIRS[key] = path
         if old is None:
-            return
+            return path
         retired = _RETIRED_DIRS.setdefault(key, [])
         retired.append(old)
         doomed = retired[:-RETIRED_KEEP]
         del retired[:-RETIRED_KEEP]
     for d in doomed:
         shutil.rmtree(d, ignore_errors=True)
+    return path
 
 
 @atexit.register
-def _remove_live_dirs() -> None:
+def _remove_root() -> None:
     # no reader outlives the interpreter, so every directory goes here
-    retired = [d for ds in _RETIRED_DIRS.values() for d in ds]
-    for d in [*_LIVE_DIRS.values(), *retired]:
-        shutil.rmtree(d, ignore_errors=True)
+    if _ROOT is not None:
+        shutil.rmtree(_ROOT, ignore_errors=True)
 
 
 _STATE_CONF_LOCK = threading.Lock()
@@ -469,8 +501,8 @@ def run_available_now(
     which renames without forking a process; remote ones keep Spark's
     default. That manager's no-overwrite create checks ``exists`` and
     then renames, so it does not guard against a second concurrent
-    writer. Every checkpoint in the engine has one writer: a private
-    ``mkdtemp`` or ``TemporaryDirectory``, or a caller-owned path.
+    writer. Every checkpoint in the engine has one writer: a fresh
+    ``live_dir`` path or ``TemporaryDirectory``, or a caller-owned path.
     """
     spark = writer._spark
     confs = {**(confs or {}), **_checkpoint_confs(checkpoint)}
@@ -503,16 +535,16 @@ def run_available_now(
 
 def run_to_memory_sink(
     stream_df,
-    sink_name: str,
+    family: str,
     output_mode: str,
     timeout_s: int = 180,
     state_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Run a finite stream into a memory sink (``run_available_now``)
-    and return the sink table. The previous sink table of the same
-    query family (name minus trailing counter) is dropped so repeated
-    builds don't accumulate result copies on the driver.
+    """Run a finite stream into a memory sink named ``<family>_<n>``
+    (``run_available_now``) and return the sink table. The family's
+    previous sink table is dropped so repeated builds don't accumulate
+    result copies on the driver.
 
     ``state_partitions`` sizes the stateful operator's state store: a
     streaming query pins spark.sql.shuffle.partitions at FIRST start
@@ -523,10 +555,8 @@ def run_to_memory_sink(
     conf is restored after the start; a concurrently *planned* batch
     query would at worst coalesce through AQE, not break.
     """
-    import tempfile
-
     spark = stream_df.sparkSession
-    family = sink_name.rstrip("0123456789")
+    sink_name = unique_name(family)
     prev = _LIVE_SINKS.get(family)
     if prev is not None:
         try:

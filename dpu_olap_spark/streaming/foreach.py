@@ -14,8 +14,6 @@ real deployment needs.
 
 from __future__ import annotations
 
-import itertools
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,12 +21,10 @@ from pyspark.sql import functions as F
 
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
+    live_dir,
     load_events_stream,
     run_available_now,
-    swap_live_dir,
 )
-
-_run_counter = itertools.count()
 
 
 def run_foreach_batch_parquet(stream_df: DataFrame, path: str, timeout_s: int = 180) -> None:
@@ -70,10 +66,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_id-partitioned layout), then read back and aggregated per
     event_type. Equality with the batch oracle proves the sink
     delivered every row exactly once across micro-batches."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"feb_sink_{os.getpid()}_{next(_run_counter)}"
-    )
-    swap_live_dir("feb_sink", out)
+    out = live_dir("feb_sink")
     stream = load_events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     run_foreach_batch_parquet(stream, out)
     sunk = spark.read.parquet(out)

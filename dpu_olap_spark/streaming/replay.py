@@ -30,7 +30,6 @@ row: 30.0s for 10M events, ~0.33 M rows/s).
 from __future__ import annotations
 
 import glob
-import itertools
 import json
 import os
 import shutil
@@ -38,11 +37,13 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from dpu_olap_spark.sources.tables import (
     JOIN_STATE_PARTITIONS_FLOOR,
     _restore_nano_ts,
     parquet_row_count,
+    raw_schema,
     replay_state_partitions,
     run_to_memory_sink,
     table_path,
@@ -50,8 +51,6 @@ from dpu_olap_spark.sources.tables import (
 
 ROWS_PER_CHUNK = 1_000_000
 CHUNKED_PARTITION_CAP = 16
-
-_replay_counter = itertools.count()
 
 
 def chunked_replay_partitions(cores: int) -> int:
@@ -165,7 +164,8 @@ def ordered_event_chunks(
     os.makedirs(stage)
     tmp = os.path.join(stage, "_multi")
     (
-        spark.read.parquet(events_path)
+        spark.read.schema(raw_schema(spark, events_path))
+        .parquet(events_path)
         .repartitionByRange(n_chunks, "ts")
         .sortWithinPartitions("ts")
         .write.mode("overwrite")
@@ -204,12 +204,16 @@ def ordered_event_chunks(
     return dst
 
 
-def chunked_events_source(spark: SparkSession, chunk_dir: str):
+def chunked_events_source(
+    spark: SparkSession, chunk_dir: str, schema: StructType
+):
     """Zero-arg factory (the ``source`` seam of
     ``interval_join_pipeline``) streaming the ordered chunks one file
     per micro-batch, with the same nano-ts restoration the single-file
-    loader applies (a no-op on already-timestamp data)."""
-    schema = spark.read.parquet(chunk_dir).schema
+    loader applies (a no-op on already-timestamp data). ``schema`` is
+    the chunks' raw schema, that of the events file they were cut
+    from (``tables.raw_schema``), so building the source runs no job.
+    """
 
     def make() -> DataFrame:
         return _restore_nano_ts(
@@ -321,7 +325,9 @@ def replay_interval_join(
     if n_chunks >= 2:
         scratch = scratch_dir or _stable_scratch(events_path, n_rows)
         chunk_dir = ordered_event_chunks(spark, events_path, scratch, n_chunks)
-        source = chunked_events_source(spark, chunk_dir)
+        source = chunked_events_source(
+            spark, chunk_dir, raw_schema(spark, events_path)
+        )
         # the chunked knee, additionally capped by the VOLUME rule:
         # at fixture scale (<= 300k rows) per-batch commit cost
         # dominates and the key-sized 8 wins (the r12 note, re-measured
@@ -338,9 +344,8 @@ def replay_interval_join(
     joined = interval_join_pipeline(
         spark, sf_dir, how=how, watermark=watermark, source=source
     )
-    sink = f"replay_ij_{how.lower()}_{next(_replay_counter)}"
     return run_to_memory_sink(
-        joined, sink, "append",
+        joined, f"replay_ij_{how.lower()}", "append",
         timeout_s=timeout_s, state_partitions=partitions,
     )
 

@@ -27,7 +27,6 @@ interleaving. Arrow batches keep the Python hop amortized.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
@@ -46,14 +45,12 @@ from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     events_state_partitions,
     join_replay_partitions,
+    live_dir,
     load_events_stream,
     load_table,
     run_available_now,
     run_to_memory_sink,
-    swap_live_dir,
 )
-
-_sink_counter = itertools.count()
 
 # A key idle for this much EVENT time (watermark domain) is evicted.
 # 30 min matches the session gap used by session_window.
@@ -438,9 +435,10 @@ def q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
         }
-    sink = f"stateful_profile_{next(_sink_counter)}"
     return finalize_user_profile(
-        run_to_memory_sink(out, sink, "update", state_partitions=8, extra_confs=extra)
+        run_to_memory_sink(
+            out, "stateful_profile", "update", state_partitions=8, extra_confs=extra
+        )
     )
 
 
@@ -462,11 +460,12 @@ def q_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality bit-for-bit even if an idle key is evicted mid-run."""
     stream = load_events_stream(spark, sf_dir)
     out = user_running_stats(stream)
-    sink = f"stateful_user_stats_{next(_sink_counter)}"
     # state partitions sized to the ~150-user active key set (see
     # run_to_memory_sink docstring; 4x fewer state-store commits/batch)
     return finalize_user_stats(
-        run_to_memory_sink(out, sink, "update", state_partitions=8)
+        run_to_memory_sink(
+            out, "stateful_user_stats", "update", state_partitions=8
+        )
     )
 
 
@@ -491,13 +490,12 @@ def _run_for_state(
     extra_confs: dict[str, str] | None = None,
 ) -> str:
     """Run a state reader's finite stream to a noop sink on a fresh
-    checkpoint and make it the live checkpoint for ``key``: the reader
-    reads the operator's state from the checkpoint, never a sink."""
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
+    live checkpoint for ``key``: the reader reads the operator's state
+    from the checkpoint, never a sink."""
+    ckpt = live_dir(key)
     confs = {"spark.sql.shuffle.partitions": str(state_partitions), **(extra_confs or {})}
     writer = stream_df.writeStream.outputMode(output_mode).format("noop")
     run_available_now(writer, ckpt, name, confs)
-    swap_live_dir(key, ckpt)
     return ckpt
 
 
@@ -530,7 +528,7 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py asserts lists this operator). The
     stream runs to a noop sink (the reader needs only its checkpoint,
     so no sink table is registered); the checkpoint persists for the
-    read, one live per process, retired on rebuild (`tables.swap_live_dir`)."""
+    read, one live per process, retired on rebuild (`tables.live_dir`)."""
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     ckpt = _run_for_state(
@@ -723,10 +721,9 @@ def q_rocksdb_state_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint")).alias("cents"),
     )
-    sink = f"rocksdb_state_agg_{next(_sink_counter)}"
     snap = run_to_memory_sink(
         agg,
-        sink,
+        "rocksdb_state_agg",
         "update",
         state_partitions=events_state_partitions(spark, sf_dir),
         extra_confs=_ROCKSDB_CONFS,
@@ -1040,9 +1037,10 @@ def q_stream_histogram_pctl(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial->final discipline (the snapshot max IS the final merge)."""
     stream = load_events_stream(spark, sf_dir)
     out = streaming_bucket_counts(stream)
-    sink = f"stream_histogram_pctl_{next(_sink_counter)}"
     # ~125 active (group, bucket) cells: 8 state partitions (see
     # run_to_memory_sink's sizing note)
     return finalize_histogram_percentiles(
-        run_to_memory_sink(out, sink, "update", state_partitions=8)
+        run_to_memory_sink(
+            out, "stream_histogram_pctl", "update", state_partitions=8
+        )
     )

@@ -16,8 +16,6 @@ against kafka/file sources with checkpointing.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,8 +27,6 @@ from dpu_olap_spark.sources.tables import (
     load_table,
     run_to_memory_sink,
 )
-
-_sink_counter = itertools.count()
 
 
 def interval_join_pipeline(
@@ -135,8 +131,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
-    sink = f"stream_static_join_sink_{next(_sink_counter)}"
-    return run_to_memory_sink(agg, sink, "complete",
+    return run_to_memory_sink(agg, "stream_static_join_sink", "complete",
                               state_partitions=events_state_partitions(spark, sf_dir))
 
 
@@ -157,9 +152,10 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming job (parquet file source, availableNow trigger,
     complete-mode memory sink) and returned as the final result table."""
     stream = load_events_stream(spark, sf_dir)
-    sink = f"stream_tumbling_sink_{next(_sink_counter)}"
-    return run_to_memory_sink(tumbling_agg(stream), sink, "complete",
-                              state_partitions=events_state_partitions(spark, sf_dir))
+    return run_to_memory_sink(
+        tumbling_agg(stream), "stream_tumbling_sink", "complete",
+        state_partitions=events_state_partitions(spark, sf_dir),
+    )
 
 
 @query(
@@ -284,8 +280,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     they occur, so the availableNow run over a finite source equals
     the batch join — the oracle."""
     joined = interval_join_pipeline(spark, sf_dir, how="inner")
-    sink = f"stream_ss_join_{next(_sink_counter)}"
-    return run_to_memory_sink(joined, sink, "append",
+    return run_to_memory_sink(joined, "stream_ss_join", "append",
                               state_partitions=join_replay_partitions(spark, sf_dir))
 
 
@@ -318,9 +313,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = f"stream_dedup_sink_{next(_sink_counter)}"
     return (
-        run_to_memory_sink(deduped, sink, "append",
+        run_to_memory_sink(deduped, "stream_dedup_sink", "append",
                            state_partitions=events_state_partitions(spark, sf_dir))
         .groupBy("event_type")
         .agg(
@@ -354,9 +348,8 @@ def q_stream_dedup_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT) oracle is exact."""
     stream = load_events_stream(spark, sf_dir).select("user_id", "event_type")
     deduped = stream.dropDuplicates(["user_id", "event_type"])
-    sink = f"stream_dedup_unb_{next(_sink_counter)}"
     return (
-        run_to_memory_sink(deduped, sink, "append",
+        run_to_memory_sink(deduped, "stream_dedup_unb", "append",
                            state_partitions=events_state_partitions(spark, sf_dir))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_users"))
@@ -409,8 +402,7 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     results trail the watermark delay in production: state is bounded
     by (delay + range) per side, sharded by the join key."""
     joined = interval_join_pipeline(spark, sf_dir, how="leftOuter")
-    sink = f"stream_lo_join_{next(_sink_counter)}"
-    return run_to_memory_sink(joined, sink, "append",
+    return run_to_memory_sink(joined, "stream_lo_join", "append",
                               state_partitions=join_replay_partitions(spark, sf_dir))
 
 
@@ -485,8 +477,7 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = f"stream_sess_app_{next(_sink_counter)}"
-    return run_to_memory_sink(agg, sink, "append",
+    return run_to_memory_sink(agg, "stream_sess_app", "append",
                               state_partitions=events_state_partitions(spark, sf_dir))
 
 
@@ -532,6 +523,5 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     both withWatermark operators of (ms-truncated post-filter max
     event time - 1 h)."""
     joined = interval_join_pipeline(spark, sf_dir, how="fullOuter")
-    sink = f"stream_fo_join_{next(_sink_counter)}"
-    return run_to_memory_sink(joined, sink, "append",
+    return run_to_memory_sink(joined, "stream_fo_join", "append",
                               state_partitions=join_replay_partitions(spark, sf_dir))

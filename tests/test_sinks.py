@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dpu_olap_spark.sources import sinks
-from dpu_olap_spark.sources.tables import load_table
+from dpu_olap_spark.sources.tables import _LIVE_DIRS, load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -209,31 +209,18 @@ def test_compaction_file_count_contract(spark, sf_dir):
     """sink_compaction must actually compact: 64 fragment files in,
     ceil(bytes/128MiB) files out (1 at test scale) — and the query's
     oracle equality proves the rewrite is lossless."""
-    import glob
-    import os
-    import tempfile
-
     from dpu_olap_spark.registry import all_queries
 
     all_queries()["sink_compaction"].build(spark, sf_dir).collect()
-    # pick THIS run's dirs by mtime, not lexicographic order: the
-    # {pid}_{counter} suffix sorts 10 before 9 and stale dirs from
-    # other pids in the shared tempdir could win (r5 ADVICE)
-    frag = max(
-        glob.glob(os.path.join(tempfile.gettempdir(), "sinkq_frag_*")),
-        key=os.path.getmtime,
-    )
-    comp = max(
-        glob.glob(os.path.join(tempfile.gettempdir(), "sinkq_compact_*")),
-        key=os.path.getmtime,
-    )
+    frag = _LIVE_DIRS["sinkq_frag"]
+    comp = _LIVE_DIRS["sinkq_compact"]
     n_frag = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
     n_comp = len([f for f in os.listdir(comp) if f.endswith(".parquet")])
     assert n_frag == 64
     assert n_comp == 1
 
 
-def test_pysink_commit_protocol(spark):
+def test_pysink_commit_protocol(spark, tmp_path):
     """The custom Python sink's two-phase commit: (a) the committed dir
     holds exactly the manifest-listed part files and no staging dir
     survives; (b) a failed write job ABORTS — staging is cleaned and
@@ -241,10 +228,10 @@ def test_pysink_commit_protocol(spark):
     import os
 
     from dpu_olap_spark.registry import all_queries
-    from dpu_olap_spark.sources.python_source import _PYSINK_DIR, _make_sink
+    from dpu_olap_spark.sources.python_source import _make_sink
 
     all_queries()["pysink_write"].build(spark, "/root/testdata/sf0.001").collect()
-    out = _PYSINK_DIR["dir"]
+    out = _LIVE_DIRS["pysink_write"]
     committed = os.path.join(out, "committed")
     with open(os.path.join(committed, "_MANIFEST")) as f:
         listed = {line for line in f.read().splitlines() if line}
@@ -254,12 +241,10 @@ def test_pysink_commit_protocol(spark):
 
     # abort path: a row that explodes mid-write must clean staging and
     # publish nothing
-    import tempfile
-
     from pyspark.sql import functions as F
 
     spark.dataSource.register(_make_sink())
-    bad_dir = tempfile.mkdtemp(prefix="pysink_abort_")
+    bad_dir = str(tmp_path)
     bad = spark.range(100).select(
         "id", F.assert_true(F.col("id") < 50).cast("string").alias("boom")
     )
@@ -288,12 +273,7 @@ def test_zorder_prunes_both_dimensions(spark):
     from dpu_olap_spark.registry import all_queries
 
     all_queries()["sink_zorder"].build(spark, "/root/testdata/sf0.01").collect()
-    from dpu_olap_spark.sources.sink_queries import _SINK_PATHS
-
-    # the sink records its published path at build time (r6 ADVICE:
-    # globbing the shared tempdir can pick up stale dirs from other
-    # processes)
-    path = _SINK_PATHS["sink_zorder"]
+    path = _LIVE_DIRS["sinkq_li_zorder"]
     back = spark.read.parquet(path)
     total = back.select(F.input_file_name()).distinct().count()
     part_files = (
@@ -313,25 +293,53 @@ def test_zorder_prunes_both_dimensions(spark):
     assert supp_files <= total // 2, (supp_files, total)
 
 
-def test_sink_builds_retire_old_output_dirs(spark):
-    """Each sink_zorder build writes a fresh directory and retires the
-    previous one: after five builds at most three of this process's
-    directories are left (the live one and two retirees), and the
-    published path is the live one."""
-    import glob
-    import os
-    import tempfile
+# query -> the live_dir key of the output directory its build returns
+_OUTPUT_KEYS = {
+    "sink_zorder": "sinkq_li_zorder",
+    "pysink_write": "pysink_write",
+    "stream_foreach_batch": "feb_sink",
+    "statestore_read": "ckpt",
+}
+
+
+@pytest.mark.parametrize("name", _OUTPUT_KEYS)
+def test_sink_builds_retire_old_output_dirs(spark, name):
+    """Each build writes a fresh directory and retires the previous
+    one: after five builds at most three of the key's directories are
+    left (the live one and two retirees), and the live one exists."""
+    import re
 
     from dpu_olap_spark.registry import all_queries
-    from dpu_olap_spark.sources.sink_queries import _SINK_PATHS
+    from dpu_olap_spark.sources import tables
 
+    key = _OUTPUT_KEYS[name]
     for _ in range(5):
-        all_queries()["sink_zorder"].build(spark, SF).collect()
-    mine = glob.glob(
-        os.path.join(tempfile.gettempdir(), f"sinkq_li_zorder_{os.getpid()}_*")
-    )
+        all_queries()[name].build(spark, SF).collect()
+    mine = [d for d in os.listdir(tables._ROOT) if re.fullmatch(rf"{key}_\d+", d)]
     assert 1 <= len(mine) <= 3, mine
-    assert os.path.isdir(_SINK_PATHS["sink_zorder"])
+    assert os.path.isdir(tables._LIVE_DIRS[key])
+
+
+def test_process_exit_leaves_nothing_behind(tmp_path):
+    """A process that gets a session, builds a parquet sink and a
+    Python-sink query and exits normally leaves nothing in its tempdir:
+    the shipped package, the sink outputs and the root they live in go
+    at exit."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "from dpu_olap_spark.registry import all_queries\n"
+        "from dpu_olap_spark.session import get_spark\n"
+        "spark = get_spark('exit-cleanup')\n"
+        "for name in ('sink_zorder', 'pysink_write'):\n"
+        f"    all_queries()[name].build(spark, {SF!r}).collect()\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": root}
+    subprocess.run([sys.executable, "-c", script], env=env, cwd=root, check=True,
+                   timeout=600)
+    assert os.listdir(tmp_path) == []
 
 
 def test_sink_build_forks_no_chmod(spark):
@@ -344,7 +352,6 @@ def test_sink_build_forks_no_chmod(spark):
     warmed first: a session's first task fetches the shipped package
     and Spark marks it executable with a forked `chmod a+x`."""
     from dpu_olap_spark.registry import all_queries
-    from dpu_olap_spark.sources.sink_queries import _SINK_PATHS
     from tests.jfr import commands, process_starts, start_marker
 
     def run():
@@ -354,6 +361,6 @@ def test_sink_build_forks_no_chmod(spark):
     run()
     forks = process_starts(spark, run)
     assert forks["true"] == 1, forks
-    written = os.listdir(_SINK_PATHS["sink_zorder"])
+    written = os.listdir(_LIVE_DIRS["sinkq_li_zorder"])
     assert any(f.endswith(".parquet.crc") for f in written), written
     assert commands(forks, "chmod") == []

@@ -186,3 +186,20 @@ def test_ann_lsh_build_runs_no_job(spark):
     its bucket there, and the tables load job-free."""
     q = all_queries()["ann_lsh"]
     assert _jobs_launched(spark, lambda: q.build(spark, SF)) == 0
+
+
+def test_chunked_events_source_runs_no_job(spark, tmp_path):
+    """A chunked replay source is handed the raw schema of the events
+    file its chunks were cut from, which equals what Spark infers over
+    the chunks, so building the source and its stream runs no job."""
+    from dpu_olap_spark.sources.tables import raw_schema
+    from dpu_olap_spark.streaming.replay import (
+        chunked_events_source,
+        ordered_event_chunks,
+    )
+
+    events = table_path(SF, "events")
+    chunk_dir = ordered_event_chunks(spark, events, str(tmp_path), 2)
+    schema = raw_schema(spark, events)
+    assert schema == spark.read.parquet(chunk_dir).schema
+    assert _jobs_launched(spark, lambda: chunked_events_source(spark, chunk_dir, schema)()) == 0

@@ -606,9 +606,9 @@ def test_cogroup_asof_handles_one_sided_keys(spark):
     assert rows == {(5, None): 1, (5, 150): 1, (10, None): 1}, rows
 
 
-def test_retired_checkpoints_bounded_per_key(tmp_path):
-    """tables.swap_live_dir keeps at most RETIRED_KEEP retired dirs per
-    key, eagerly deleting older ones, so long bench loops cannot grow
+def test_retired_checkpoints_bounded_per_key():
+    """tables.live_dir keeps at most RETIRED_KEEP retired dirs per key,
+    eagerly deleting older ones, so long bench loops cannot grow
     tempdir usage without bound — while the most recent retirees
     survive for any still-lazy reader. Pure bookkeeping, no Spark."""
     from dpu_olap_spark.sources import tables
@@ -619,17 +619,15 @@ def test_retired_checkpoints_bounded_per_key(tmp_path):
     tables._RETIRED_DIRS.clear()
     try:
         dirs = []
-        for i in range(6):
-            d = tmp_path / f"ckpt_{i}"
-            d.mkdir()
-            dirs.append(str(d))
-            tables.swap_live_dir("k", str(d))
+        for _ in range(6):
+            d = tables.live_dir("k")
+            os.mkdir(d)
+            dirs.append(d)
         keep = tables.RETIRED_KEEP
         retired = tables._RETIRED_DIRS["k"]
         # live = dirs[5]; retired list holds the newest `keep` retirees
         assert retired == dirs[5 - keep : 5]
         assert tables._LIVE_DIRS["k"] == dirs[5]
-        import os
 
         for d in dirs[: 5 - keep]:
             assert not os.path.exists(d), f"old retiree {d} not deleted"
@@ -659,9 +657,7 @@ def test_stream_histogram_pctl_state_bounded_and_batch_exact(spark):
     out = st.streaming_bucket_counts(load_events_stream(spark, sf))
     from dpu_olap_spark.sources.tables import run_to_memory_sink
 
-    sink = f"hist_pctl_test_{next(st._sink_counter)}"
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
-    emitted = spark.table(sink)
+    emitted = run_to_memory_sink(out, "hist_pctl_test", "update", state_partitions=8)
 
     W = st.HIST_BUCKET_CENTS_STREAM
     events = load_table(spark, sf, "events").where(F.col("value").isNotNull())
@@ -745,22 +741,19 @@ def test_time_ordered_chunked_replay_matches_single_batch(
     import time as _time
     from collections import Counter
 
-    from dpu_olap_spark.sources.tables import run_to_memory_sink
+    from dpu_olap_spark.sources.tables import raw_schema, run_to_memory_sink
     from dpu_olap_spark.streaming.replay import chunked_events_source
     from dpu_olap_spark.streaming.windows import interval_join_pipeline
 
     sf = "/root/testdata/sf0.001"
 
-    def drain(source, label):
+    def drain(source):
         joined = interval_join_pipeline(spark, sf, how="fullOuter",
                                         source=source, watermark=watermark)
-        sink = f"chunkeq_{n_chunks}_{watermark.split()[0]}_{label}"
-        run_to_memory_sink(joined, sink, "append", state_partitions=8)
-        rows = Counter(tuple(r) for r in spark.table(sink).collect())
-        spark.catalog.dropTempView(sink)
-        return rows
+        sunk = run_to_memory_sink(joined, "chunkeq", "append", state_partitions=8)
+        return Counter(tuple(r) for r in sunk.collect())
 
-    single = drain(None, "single")
+    single = drain(None)
 
     # time-ordered chunk fixture in tmp_path (the testdata dir is
     # read-only; chunk boundaries are exact repartitionByRange splits)
@@ -778,7 +771,10 @@ def test_time_ordered_chunked_replay_matches_single_batch(
         shutil.move(part, tgt)
         os.utime(tgt, (now + i, now + i))
 
-    chunked = drain(chunked_events_source(spark, chunk_dir), "chunked")
+    events = os.path.join(sf, "events.parquet")
+    chunked = drain(
+        chunked_events_source(spark, chunk_dir, raw_schema(spark, events))
+    )
     assert chunked == single and sum(single.values()) > 0, (
         f"chunked replay diverged: {sum(chunked.values())} rows vs "
         f"{sum(single.values())}"
@@ -909,6 +905,7 @@ def test_disordered_replay_negatives_and_filter_lag(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     import fuzz_replay as fr
 
+    from dpu_olap_spark.sources.tables import raw_schema
     from dpu_olap_spark.streaming.replay import (
         chunked_events_source,
         ordered_event_chunks,
@@ -917,15 +914,16 @@ def test_disordered_replay_negatives_and_filter_lag(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     scratch = str(tmp_path)
     wm = "10 minutes"
+    events = os.path.join(sf, "events.parquet")
 
     def run(name, source):
         return fr._run(spark, sf, name, wm, source)
 
     def disordered(k):
         od = ordered_event_chunks(
-            spark, os.path.join(sf, "events.parquet"),
-            os.path.join(scratch, f"k{k}"), k)
-        return chunked_events_source(spark, fr._disordered_dir(od, scratch))
+            spark, events, os.path.join(scratch, f"k{k}"), k)
+        return chunked_events_source(
+            spark, fr._disordered_dir(od, scratch), raw_schema(spark, events))
 
     # (a) k=3 dedup: late keys genuinely dropped
     base_dedup = run("dedup", None)
@@ -965,6 +963,7 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     import fuzz_replay as fr
 
+    from dpu_olap_spark.sources.tables import raw_schema
     from dpu_olap_spark.streaming.replay import (
         chunked_events_source,
         ordered_event_chunks,
@@ -973,21 +972,20 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     scratch = str(tmp_path)
     wm = "10 minutes"
-    od = ordered_event_chunks(
-        spark, os.path.join(sf, "events.parquet"),
-        os.path.join(scratch, "k8"), 8)
+    events = os.path.join(sf, "events.parquet")
+    od = ordered_event_chunks(spark, events, os.path.join(scratch, "k8"), 8)
+
+    def source(cdir):
+        return chunked_events_source(spark, cdir, raw_schema(spark, events))
 
     base = fr._run(spark, sf, "dedup", wm, None)
-    ordered = fr._run(spark, sf, "dedup", wm,
-                      chunked_events_source(spark, od))
+    ordered = fr._run(spark, sf, "dedup", wm, source(od))
     assert ordered == base, "strictly-increasing-mtime replay diverged"
 
     tied = fr._run(
-        spark, sf, "dedup", wm,
-        chunked_events_source(spark, fr._tied_dir(od, scratch, False)))
+        spark, sf, "dedup", wm, source(fr._tied_dir(od, scratch, False)))
     tied_rev = fr._run(
-        spark, sf, "dedup", wm,
-        chunked_events_source(spark, fr._tied_dir(od, scratch, True)))
+        spark, sf, "dedup", wm, source(fr._tied_dir(od, scratch, True)))
     n_base = sum(base.values())
     n_tied, n_rev = sum(tied.values()), sum(tied_rev.values())
     assert 0 < n_tied <= n_base and 0 < n_rev <= n_base, (
@@ -1002,8 +1000,7 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
     hb = fr._run(spark, sf, "hist_pctl", wm, None)
     for cdir in (od, fr._tied_dir(od, scratch, False),
                  fr._tied_dir(od, scratch, True)):
-        got = fr._run(spark, sf, "hist_pctl", wm,
-                      chunked_events_source(spark, cdir))
+        got = fr._run(spark, sf, "hist_pctl", wm, source(cdir))
         assert got == hb, "histogram op not order-invariant"
 
 
@@ -1222,3 +1219,31 @@ def test_every_finite_stream_goes_through_the_runner():
     assert sorted(a for a, _ in _stream_runner_calls(runner)) == [
         "awaitTermination", "option", "trigger",
     ]
+
+
+def test_one_module_owns_the_tempdir():
+    """Only sources/tables.py (the per-process root that live_dir hands
+    out directories under) and streaming/replay.py (its chunk cache,
+    shared across processes and checked by content) look up the
+    tempdir: any other module that calls tempfile.gettempdir names and
+    retires its own output again."""
+    import ast
+    import glob
+
+    import dpu_olap_spark
+
+    root = os.path.dirname(dpu_olap_spark.__file__)
+    owners = {os.path.join("sources", "tables.py"), os.path.join("streaming", "replay.py")}
+    offenders = {}
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        lines = [
+            node.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and "gettempdir" in (getattr(node.func, "attr", None), getattr(node.func, "id", None))
+        ]
+        if lines and os.path.relpath(path, root) not in owners:
+            offenders[os.path.relpath(path, root)] = lines
+    assert offenders == {}

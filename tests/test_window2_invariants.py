@@ -128,13 +128,11 @@ def test_changefeed_history_is_monotone(spark):
         assert h[-1][1] == final[uid]
 
 
-def test_session_pair_accounts_for_every_session(spark):
+def test_session_pair_accounts_for_every_session(spark, tmp_path):
     """The delivery contract claimed by stream_session_append +
     statestore_session_read, proven on ONE pipeline (same 2 h delay):
     sessions EMITTED in append mode and sessions REMAINING in state
     are disjoint and together equal the batch sessionization."""
-    import tempfile
-
     from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK, load_events_stream
 
     sf = "/root/testdata/sf0.001"
@@ -145,7 +143,7 @@ def test_session_pair_accounts_for_every_session(spark):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("sw.start").alias("sess_start"), "n_events")
     )
-    ckpt = tempfile.mkdtemp(prefix="sess_pair_")
+    ckpt = str(tmp_path / "sess_pair")
     with _STATE_CONF_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions", None)
         spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -212,12 +210,10 @@ def test_session_pair_accounts_for_every_session(spark):
     assert emitted | in_state == batch
 
 
-def test_left_outer_join_accounts_for_every_purchase(spark):
+def test_left_outer_join_accounts_for_every_purchase(spark, tmp_path):
     """stream_left_outer_join completeness: every UNMATCHED purchase is
     either emitted null-extended or still held in left join state —
     disjointly, with nothing lost."""
-    import tempfile
-
     from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK, load_events_stream
 
     sf = "/root/testdata/sf0.001"
@@ -240,7 +236,7 @@ def test_left_outer_join_accounts_for_every_purchase(spark):
         ),
         "leftOuter",
     ).select(F.col("purchase_user").alias("user_id"), "purchase_id", "click_id")
-    ckpt = tempfile.mkdtemp(prefix="lo_acct_")
+    ckpt = str(tmp_path / "lo_acct")
     with _STATE_CONF_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions", None)
         spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -1,15 +1,37 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: the physical-plan evidence for the headline
-queries (pushdown, pruning, join strategy, partial aggregation).
-Run: python tools/explain_all.py [sf_dir]"""
+"""Physical-plan evidence for the headline queries, in two modes.
+
+    python tools/explain_all.py [sf_dir]
+        Regenerate PLANS.md: for each query in SHOW, the plan lines
+        that carry the scale properties (pushdown, pruning, join
+        strategy, partial aggregation, exchange count). Notes below
+        NOTES_MARKER are kept.
+
+    python tools/explain_all.py [sf_dir] --formatted TAG [NAME ...]
+        Write each query's .explain("formatted") to
+        plans/<dir>/<name>_<TAG>.txt (<dir> from
+        $SPARK_GRAFT_PLANS_TAG_DIR, default r19) — before/after plan
+        evidence for an optimization (default names: every bench.py
+        HEADLINE query). Queries whose build() runs a stream or writes
+        a sink are skipped: the plan of the DataFrame they return is a
+        plain read of the result (their evidence is the executed-plan
+        audit in SCALE_PROBE.md and the phase metrics in
+        OPTIMIZATION_r18.md).
+
+sf_dir defaults to $SPARK_GRAFT_SF_DIR, else the sf0.1 testdata directory.
+"""
 
 from __future__ import annotations
 
+import argparse
+import io
 import os
 import re
 import sys
+from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from dpu_olap_spark.registry import all_queries
 from dpu_olap_spark.session import get_spark
@@ -109,10 +131,24 @@ MARKERS = (
 )
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark("explain-all")
-    spark.sparkContext.setLogLevel("ERROR")
+# build() runs side effects (streams, sinks) for these families; the
+# formatted plan of the RETURNED df is a plain batch read of the
+# result, which carries no optimization signal.
+_SKIP_PREFIXES = (
+    "stream",
+    "statestore_",
+    "joinstate_read",
+    "sink_",
+    "pysink_write",
+    "merge_upsert",
+    "cache_scan",
+    "stateful_",
+    "rocksdb_",
+    "pystream_scan",
+)
+
+
+def write_plans_md(spark, sf_dir: str) -> None:
     queries = all_queries()
     out = [
         "# PLANS — physical-plan evidence (generated by tools/explain_all.py)",
@@ -143,9 +179,7 @@ def main() -> None:
             out.append(ln)
         out.append("```")
         out.append("")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
-    )
+    path = os.path.join(ROOT, "PLANS.md")
     notes = ""
     if os.path.exists(path):
         with open(path) as f:
@@ -158,6 +192,46 @@ def main() -> None:
         if notes:
             f.write(notes)
     print("PLANS.md written")
+
+
+def write_formatted(spark, sf_dir: str, tag: str, names: list[str]) -> None:
+    out_dir = os.path.join(
+        ROOT, "plans", os.environ.get("SPARK_GRAFT_PLANS_TAG_DIR", "r19")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    if not names:
+        from bench import HEADLINE
+
+        names = list(HEADLINE)
+    queries = all_queries()
+    for name in names:
+        if name.startswith(_SKIP_PREFIXES):
+            print(f"skip {name} (side-effecting build)")
+            continue
+        df = queries[name].build(spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(buf.getvalue())
+        print(f"wrote {path}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "sf_dir", nargs="?",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    )
+    ap.add_argument("--formatted", nargs="+", metavar=("TAG", "NAME"))
+    args = ap.parse_args()
+    spark = get_spark("explain-all")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.formatted:
+        write_formatted(spark, args.sf_dir, args.formatted[0], args.formatted[1:])
+    else:
+        write_plans_md(spark, args.sf_dir)
 
 
 if __name__ == "__main__":

@@ -133,28 +133,21 @@ def _build_pipeline(spark, sf_dir: str, name: str, watermark: str, source):
     raise ValueError(name)
 
 
-def _finalize(spark, name: str, sink: str) -> Counter:
+def _finalize(name: str, df) -> Counter:
     from dpu_olap_spark.streaming.stateful import finalize_histogram_percentiles
 
-    df = spark.table(sink)
     if name == "hist_pctl":
         df = finalize_histogram_percentiles(df)
     return Counter(tuple(r) for r in df.collect())
-
-
-_counter = [0]
 
 
 def _run(spark, sf_dir: str, name: str, watermark: str, source) -> Counter:
     from dpu_olap_spark.sources.tables import run_to_memory_sink
 
     df, mode = _build_pipeline(spark, sf_dir, name, watermark, source)
-    _counter[0] += 1
-    sink = f"fr_{name}_{_counter[0]}"
-    run_to_memory_sink(df, sink, mode, state_partitions=8)
-    rows = _finalize(spark, name, sink)
-    spark.catalog.dropTempView(sink)
-    return rows
+    return _finalize(
+        name, run_to_memory_sink(df, f"fr_{name}", mode, state_partitions=8)
+    )
 
 
 def _disordered_dir(ordered_dir: str, scratch: str) -> str:
@@ -211,6 +204,7 @@ def run_case(spark, seed: int, sf_dir: str, scratch: str,
              force_order: str | None = None) -> str:
     """One fuzz case; returns a one-line description, raises
     AssertionError on divergence from the case's expectation."""
+    from dpu_olap_spark.sources.tables import raw_schema
     from dpu_olap_spark.streaming.replay import (
         chunked_events_source,
         ordered_event_chunks,
@@ -243,10 +237,10 @@ def run_case(spark, seed: int, sf_dir: str, scratch: str,
         baselines[bkey] = _run(spark, sf_dir, name, watermark, None)
     single = baselines[bkey]
 
+    events = os.path.join(sf_dir, "events.parquet")
     if k not in chunk_dirs:
         chunk_dirs[k] = ordered_event_chunks(
-            spark, os.path.join(sf_dir, "events.parquet"),
-            os.path.join(scratch, f"k{k}"), k,
+            spark, events, os.path.join(scratch, f"k{k}"), k,
         )
     if flavor == "negative":
         cdir = _disordered_dir(chunk_dirs[k], scratch)
@@ -257,7 +251,7 @@ def run_case(spark, seed: int, sf_dir: str, scratch: str,
     else:
         cdir = chunk_dirs[k]
     got = _run(spark, sf_dir, name, watermark,
-               chunked_events_source(spark, cdir))
+               chunked_events_source(spark, cdir, raw_schema(spark, events)))
 
     label = (f"{name} k={k} wm={watermark!r} {flavor.upper()}")
     if name == "hist_pctl":

@@ -1255,12 +1255,11 @@ def probe_stream_state(
     from dpu_olap_spark.streaming import stateful as _st
 
     hist_out = _st.streaming_bucket_counts(load_events_stream(spark, sf_dir))
-    hist_sink = f"probe_hist_{next(_st._sink_counter)}"
     from dpu_olap_spark.sources.tables import run_to_memory_sink
 
-    run_to_memory_sink(hist_out, hist_sink, "update", state_partitions=8)
+    hist = run_to_memory_sink(hist_out, "probe_hist", "update", state_partitions=8)
     extra["hist_state_cells"] = (
-        spark.table(hist_sink).select("event_type", "b").distinct().count()
+        hist.select("event_type", "b").distinct().count()
     )
     sides = {
         r["side"]: r["count"]
