@@ -592,8 +592,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_part = max(4, min(n_conf, corpus_rows // 300_000))
     max_rounds = int(os.environ.get("SPARK_GRAFT_CC_MAX_ROUNDS", "16"))
-    labels, rounds = _propagate_min_labels(corpus, edges, n_part, max_rounds)
-    _LAST_ITERATIONS[sf_dir] = rounds
+    labels, _ = _propagate_min_labels(corpus, edges, n_part, max_rounds)
     # bound retention across invocations: release the previous call's
     # result snapshot (the caller consumes the returned frame promptly;
     # only the latest stays materialized)
@@ -609,15 +608,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LAST_RESULT = None
-# diagnostics: propagation rounds the last q_dedup_clusters call took,
-# KEYED BY sf_dir (read by tools/scale_probe.py to report iteration
-# count vs size — the "iterations = cluster diameter, not corpus size"
-# scale claim). Keyed rather than a single global so a concurrent
-# query on a different sf_dir (e.g. the bench's thread-pool phase)
-# cannot attribute its iteration count to the probe's run (r8 ADVICE);
-# concurrent calls on the SAME sf_dir run the same graph, so a
-# same-key overwrite carries the same value.
-_LAST_ITERATIONS: dict[str, int] = {}
 
 
 _N_SIM_BITS = 16  # bits of the md5-derived base hash used for the signature

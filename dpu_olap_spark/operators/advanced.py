@@ -6,7 +6,7 @@ entry path (spark.sql over registered views).
 
 Exactness discipline: any predicate or measure involving an aggregate
 is algebraically rearranged to avoid engine-specific float summation
-(DECIMAL sums, multiply-through instead of divide) so Spark and DuckDB
+(exact_sum, multiply-through instead of divide) so Spark and DuckDB
 agree bit-for-bit.
 """
 
@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -200,7 +201,7 @@ def q_decorrelated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
     )
     return (
         li.join(per_part, "l_partkey")
@@ -232,10 +233,8 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     s = li.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sq"),
-        F.sum((F.col("l_quantity") * F.col("l_quantity")).cast("decimal(18,4)"))
-        .cast("double")
-        .alias("sqq"),
+        exact_sum(F.col("l_quantity"), 2).alias("sq"),
+        exact_sum(F.col("l_quantity") * F.col("l_quantity"), 4).alias("sqq"),
     )
     n, sq, sqq = F.col("n"), F.col("sq"), F.col("sqq")
     # UNROUNDED (r11): every operand (decimal-exact sums as double,
@@ -521,9 +520,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24.0)
         )
         .agg(
-            F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
+            exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"),
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
@@ -565,11 +562,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
         .limit(20)
@@ -604,18 +597,13 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
     part = load_table(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     s = (
         li.join(part, li.l_partkey == part.p_partkey)
         .agg(
-            F.sum(
-                F.when(F.col("p_type").like("PROMO%"), rev).otherwise(
-                    F.lit(0).cast("decimal(18,4)")
-                )
-            )
-            .cast("double")
+            exact_sum(F.when(F.col("p_type").like("PROMO%"), rev).otherwise(0.0), 4)
             .alias("promo_rev"),
-            F.sum(rev).cast("double").alias("total_rev"),
+            exact_sum(rev, 4).alias("total_rev"),
         )
     )
     return s.select(
@@ -653,7 +641,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("tq"))
+        .agg(exact_sum(F.col("l_quantity"), 2).alias("tq"))
         .where(F.col("tq") > 200.0)
         .select("l_orderkey")
     )
@@ -665,7 +653,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li.select(F.col("l_orderkey").alias("lk"), "l_quantity"), F.col("lk") == o.o_orderkey)
         .groupBy("c_name", "o_orderkey", "o_totalprice")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("total_qty")
+            exact_sum(F.col("l_quantity"), 2).alias("total_qty")
         )
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(20)
@@ -731,9 +719,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_revenue")
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("total_revenue")
     )
     top = (
         revenue.withColumn(

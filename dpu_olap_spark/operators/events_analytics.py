@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -359,7 +360,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     actual = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        exact_sum(F.col("value"), 2).alias("sum_value"),
     )
     from pyspark.sql import Window as W
 
@@ -517,9 +518,7 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum(F.col("l_extendedprice"), 2).alias("sum_price"),
         )
     )
 
@@ -578,9 +577,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum(F.col("l_extendedprice"), 2).alias("sum_price"),
         )
     )
 

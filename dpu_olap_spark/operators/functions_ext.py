@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -878,7 +879,7 @@ def q_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = li.mapInArrow(charge_batches, "l_returnflag string, charge double")
     return out.groupBy("l_returnflag").agg(
-        F.sum(F.col("charge").cast("decimal(18,6)")).cast("double").alias("sum_charge"),
+        exact_sum(F.col("charge"), 6).alias("sum_charge"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -915,9 +916,7 @@ def q_arrow_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1995-06-01") & (F.col("l_shipdate") < "1995-07-01")
     )
     return li.groupBy("l_orderkey").agg(
-        F.sum(disc_price("l_extendedprice", "l_discount").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("revenue")
+        exact_sum(disc_price("l_extendedprice", "l_discount"), 4).alias("revenue")
     )
 
 

@@ -10,9 +10,11 @@ Reference semantics (file:line cites into /root/reference/):
 - join:      PK-FK inner equi hash join      (host/join/join_dpu.cc:168-400)
 
 Numeric discipline: the reference sums uint32 into uint64
-(shared/umq/kernels.h:49-51) to avoid overflow; we widen doubles into
-DECIMAL before SUM so Spark and the DuckDB oracle agree bit-for-bit
-regardless of accumulation order, then cast the final scalar to DOUBLE.
+(shared/umq/kernels.h:49-51); functions/numeric.exact_sum sums each
+double's unscaled integer (x * 10^s half-up; ties and out-of-range
+values take the exact DECIMAL cast) as DECIMAL(18,0) and scales the
+total back once, so Spark and the DuckDB oracle agree bit-for-bit
+regardless of accumulation order.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -67,8 +70,8 @@ def q_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+        exact_sum(F.col("l_extendedprice"), 2).alias("sum_price"),
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -158,7 +161,7 @@ def q_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("l_orderkey").alias("key_sum"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("qty_sum"),
+        exact_sum(F.col("l_quantity"), 2).alias("qty_sum"),
     )
 
 
@@ -221,11 +224,7 @@ def q_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue"),
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -262,10 +261,6 @@ def q_fact_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue"),
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
         )
     )

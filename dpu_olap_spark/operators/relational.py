@@ -4,8 +4,8 @@ semi/anti joins, scalar functions. All Spark built-ins — zero custom
 code — each verified against the DuckDB oracle.
 
 Determinism rules used throughout:
-- money/quantity SUMs go through DECIMAL (order-independent exact
-  arithmetic) and cast the final value to DOUBLE;
+- money/quantity SUMs are exact integer sums of unscaled values
+  (functions/numeric.exact_sum, order-independent) cast to DOUBLE;
 - every ordering used by rank/limit is made total with a key tiebreak
   (lesson of the reference's own canonicalization,
   host/join/join_test.cc:27-38).
@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -50,12 +51,10 @@ def q_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_base_price"),
-            F.sum(disc_price.cast("decimal(18,6)")).cast("double").alias("sum_disc_price"),
-            F.sum(charge.cast("decimal(18,6)")).cast("double").alias("sum_charge"),
+            exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice"), 2).alias("sum_base_price"),
+            exact_sum(disc_price, 6).alias("sum_disc_price"),
+            exact_sum(charge, 6).alias("sum_charge"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -157,17 +156,17 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-customer spend: frame-based window aggregate. DECIMAL
-    accumulation keeps the prefix sums engine-independent."""
+    """Running per-customer spend: frame-based window aggregate. Exact
+    integer accumulation (exact_sum over the frame) keeps the prefix
+    sums engine-independent."""
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("double")
-        .alias("running_spend"),
+        exact_sum(
+            F.col("o_totalprice"), 2, w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).alias("running_spend"),
         F.row_number().over(w).alias("order_seq"),
     )
 
@@ -215,7 +214,7 @@ def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
     )
 
 
@@ -234,7 +233,7 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
+        exact_sum(F.col("o_totalprice"), 2).alias("sum_price"),
     )
 
 
@@ -436,7 +435,7 @@ def q_multi_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region_name"), F.year("o_orderdate").alias("order_year"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total_sales"),
+            exact_sum(F.col("o_totalprice"), 2).alias("total_sales"),
         )
     )
 
@@ -458,7 +457,7 @@ def q_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("spend"),
+            exact_sum(F.col("o_totalprice"), 2).alias("spend"),
         )
         .where(F.col("n_orders") >= 12)
     )

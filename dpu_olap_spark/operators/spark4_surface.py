@@ -17,6 +17,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
 
@@ -61,9 +62,7 @@ def q_cache_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = spark.table(_CACHE_VIEW)
     agg = [
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_qty"),
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
     ]
     per_flag = cached.groupBy("l_returnflag", "l_linestatus").agg(*agg)
     total = cached.agg(

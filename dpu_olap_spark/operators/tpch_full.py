@@ -16,10 +16,10 @@ reference cares about): the same joins, correlated/decorrelated
 subqueries, conditional aggregates, and anti/semi joins, each with an
 exact DuckDB oracle.
 
-Exactness discipline (see tests/oracle.py): float SUMs go through
-DECIMAL and come back as DOUBLE on both engines; averages are
-multiplied through or divided as double-of-exact-sums; years are
-BIGINT on both sides.
+Exactness discipline (see tests/oracle.py): float SUMs are exact_sum,
+bit for bit the oracles' SUM(CAST(x AS DECIMAL(18,s))) as DOUBLE;
+averages are multiplied through or divided as double-of-exact-sums;
+years are BIGINT on both sides.
 """
 
 from __future__ import annotations
@@ -27,13 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import load_table
-
-
-def _dsum(col, scale: str = "decimal(18,4)"):
-    """Order-independent exact float sum: decimal accumulate, double out."""
-    return F.sum(col.cast(scale)).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -68,16 +64,15 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cnt = F.count(F.lit(1))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        _dsum(F.col("l_quantity"), "decimal(18,2)").alias("sum_qty"),
-        _dsum(F.col("l_extendedprice"), "decimal(18,2)").alias("sum_base_price"),
-        _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-        _dsum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")),
-            "decimal(18,6)",
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
+        exact_sum(F.col("l_extendedprice"), 2).alias("sum_base_price"),
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("sum_disc_price"),
+        exact_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")), 6
         ).alias("sum_charge"),
-        (_dsum(F.col("l_quantity"), "decimal(18,2)") / cnt).alias("avg_qty"),
-        (_dsum(F.col("l_extendedprice"), "decimal(18,2)") / cnt).alias("avg_price"),
-        (_dsum(F.col("l_discount")) / cnt).alias("avg_disc"),
+        (exact_sum(F.col("l_quantity"), 2) / cnt).alias("avg_qty"),
+        (exact_sum(F.col("l_extendedprice"), 2) / cnt).alias("avg_price"),
+        (exact_sum(F.col("l_discount"), 4) / cnt).alias("avg_disc"),
         cnt.alias("count_order"),
     )
 
@@ -180,7 +175,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
         )
     )
 
@@ -240,7 +235,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("bigint").alias("l_year")
         )
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
         )
     )
 
@@ -277,7 +272,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: 8-table join; market share = division of two exact
-    decimal sums done in double on both engines."""
+    sums (exact_sum) done in double on both engines."""
     p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
@@ -304,15 +299,15 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), s.s_nationkey == F.col("n2_key"))
         .select(
             F.year("o_orderdate").cast("bigint").alias("o_year"),
-            vol.cast("decimal(18,4)").alias("volume"),
+            vol.alias("volume"),
             "nation",
         )
     )
-    zero = F.lit(0).cast("decimal(18,4)")
+    volume = F.col("volume")
     return base.groupBy("o_year").agg(
         (
-            F.sum(F.when(F.col("nation") == "NATION_3", F.col("volume")).otherwise(zero)).cast("double")
-            / F.sum("volume").cast("double")
+            exact_sum(F.when(F.col("nation") == "NATION_3", volume).otherwise(0.0), 4)
+            / exact_sum(volume, 4)
         ).alias("mkt_share")
     )
 
@@ -360,7 +355,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("bigint").alias("o_year"),
         )
-        .agg(_dsum(profit).alias("sum_profit"))
+        .agg(exact_sum(profit, 4).alias("sum_profit"))
     )
 
 
@@ -398,7 +393,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
-        .agg(_dsum(F.col("l_extendedprice"), "decimal(18,2)").alias("value"))
+        .agg(exact_sum(F.col("l_extendedprice"), 2).alias("value"))
     )
     total = supval.agg(F.sum("value").alias("total"))
     return (
@@ -556,7 +551,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     through (5*qty*cnt < sum) so no engine divides."""
     li = load_table(spark, sf_dir, "lineitem")
     perpart = li.groupBy(F.col("l_partkey").alias("pp_partkey")).agg(
-        _dsum(F.col("l_quantity"), "decimal(18,2)").alias("sum_qty"),
+        exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
         F.count(F.lit(1)).alias("cnt"),
     )
     p = load_table(spark, sf_dir, "part").where(
@@ -567,7 +562,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(perpart, li.l_partkey == F.col("pp_partkey"))
         .where(F.col("l_quantity") * 5 * F.col("cnt") < F.col("sum_qty"))
         .agg(
-            (_dsum(F.col("l_extendedprice"), "decimal(18,2)") / 7.0).alias("avg_yearly")
+            (exact_sum(F.col("l_extendedprice"), 2) / 7.0).alias("avg_yearly")
         )
     )
 
@@ -616,7 +611,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(p, li.l_partkey == p.p_partkey)
         .where(d1 | d2 | d3)
         .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
         )
     )
 
@@ -657,7 +652,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
     shipped = li.groupBy("l_partkey", "l_suppkey").agg(
-        _dsum(F.col("l_quantity"), "decimal(18,2)").alias("qty")
+        exact_sum(F.col("l_quantity"), 2).alias("qty")
     )
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%bolt%"))
     qualifying = (
@@ -784,7 +779,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_nationkey") % 7).isin(1, 3, 5)
     )
     pos = c.where(F.col("c_acctbal") > 0).agg(
-        _dsum(F.col("c_acctbal"), "decimal(18,2)").alias("bal_sum"),
+        exact_sum(F.col("c_acctbal"), 2).alias("bal_sum"),
         F.count(F.lit(1)).alias("bal_cnt"),
     )
     o = (
@@ -798,6 +793,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("c_nationkey") % 7).alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            _dsum(F.col("c_acctbal"), "decimal(18,2)").alias("totacctbal"),
+            exact_sum(F.col("c_acctbal"), 2).alias("totacctbal"),
         )
     )

@@ -1,3 +1,3 @@
-from dpu_olap_spark.sources.tables import TABLES, load_table, load_tables
+from dpu_olap_spark.sources.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -30,6 +30,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources import sinks
 from dpu_olap_spark.sources.tables import live_dir, load_table, unique_name
@@ -54,10 +55,9 @@ def q_sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition filter (pruned scan — only the 1996/1997 directories are
     touched), then aggregated. Oracle equality over the original table
     proves the partitioned layout is lossless and the pruned read
-    complete. Sums cast to decimal BEFORE aggregation (order-independent
-    exact arithmetic) with a DOUBLE final cast; order_year cast to
-    BIGINT because the hive-partition read-back infers INT while DuckDB
-    year() is BIGINT."""
+    complete. Sums are exact_sum (order-independent integer
+    accumulation, DOUBLE out); order_year cast to BIGINT because the
+    hive-partition read-back infers INT while DuckDB year() is BIGINT."""
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
@@ -72,9 +72,7 @@ def q_sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            exact_sum(F.col("o_totalprice"), 2).alias("total_price"),
         )
     )
 
@@ -124,7 +122,7 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = sinks.read_json(spark, path, supplier.schema)
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(F.col("s_acctbal").cast("decimal(18,2)")).cast("double").alias("sum_acctbal"),
+        exact_sum(F.col("s_acctbal"), 2).alias("sum_acctbal"),
     )
 
 
@@ -147,7 +145,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = sinks.read_orc(spark, path)
     return back.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_parts"),
-        F.sum(F.col("p_retailprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
+        exact_sum(F.col("p_retailprice"), 2).alias("sum_price"),
     )
 
 
@@ -166,17 +164,15 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     no external package) and a schema-explicit read back, aggregated
     per market segment. XML is the interchange format that carries no
     type information at all, so the explicit read schema is what makes
-    the round-trip lossless; decimal sums follow the cast-before-sum
-    discipline every other sink query uses."""
+    the round-trip lossless; sums are exact_sum, as in every other
+    sink query."""
     customer = load_table(spark, sf_dir, "customer")
     path = live_dir("sinkq_cust_xml")
     sinks.write_xml(customer, path)
     back = sinks.read_xml(spark, path, customer.schema)
     return back.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_acctbal"),
+        exact_sum(F.col("c_acctbal"), 2).alias("sum_acctbal"),
     )
 
 
@@ -214,9 +210,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined = bo.join(bc, bo.o_custkey == bc.c_custkey)
         out = joined.groupBy("c_mktsegment").agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            exact_sum(F.col("o_totalprice"), 2).alias("total_price"),
         )
         # materialize under the no-broadcast conf, then restore; the
         # bucketed source tables outlive the call only until the next
@@ -270,9 +264,7 @@ def q_sink_range_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("month", "l_shipdate").alias("ship_month"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum(F.col("l_extendedprice"), 2).alias("sum_price"),
         )
     )
 
@@ -318,7 +310,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.read.schema(ev.schema).parquet(compacted)
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        exact_sum(F.col("value"), 2).alias("sum_value"),
         F.sum("event_id").cast("bigint").alias("id_checksum"),
     )
 
@@ -399,8 +391,6 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("l_suppkey") % 8).cast("bigint").alias("supp_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum(F.col("l_extendedprice"), 2).alias("sum_price"),
         )
     )

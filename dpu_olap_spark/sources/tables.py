@@ -316,16 +316,6 @@ def _restore_nano_ts(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() queries work."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def raw_schema(spark: SparkSession, path: str) -> T.StructType:
     """The schema to hand a reader of ``path`` before any restoration:
     from the footer (no job), or from Spark's inference (one job) when

@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     live_dir,
@@ -72,5 +73,5 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sunk = spark.read.parquet(out)
     return sunk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        exact_sum(F.col("value"), 2).alias("sum_value"),
     )

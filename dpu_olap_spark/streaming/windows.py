@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dpu_olap_spark.functions.numeric import exact_sum
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     events_state_partitions,
@@ -93,7 +94,7 @@ def tumbling_agg(events: DataFrame, window: str = "1 hour") -> DataFrame:
         .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+            exact_sum(F.col("value"), 2).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -129,7 +130,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream.join(F.broadcast(cust), stream.user_id == cust.c_custkey)
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        exact_sum(F.col("value"), 2).alias("sum_value"),
     )
     return run_to_memory_sink(agg, "stream_static_join_sink", "complete",
                               state_partitions=events_state_partitions(spark, sf_dir))
@@ -320,9 +321,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.count_distinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum(F.col("value"), 2).alias("sum_value"),
         )
     )
 

@@ -443,11 +443,7 @@ def probe_cc(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, int]]:
         ).save()
         walls.append(time.perf_counter() - t0)
     t["dedup_clusters"] = round(min(walls), 3)
-    extra: dict[str, int] = {
-        # keyed by sf_dir (r8 ADVICE): the probe reads ITS run's count
-        # even if another q_dedup_clusters call interleaves elsewhere
-        "cc_iterations": int(dd._LAST_ITERATIONS.get(sf_dir, 0))
-    }
+    extra: dict[str, int] = {}
 
     # one propagation round, instrumented via the SAME construction
     # helpers the production loop uses (dd._cc_edges / dd._cc_round —
@@ -1460,13 +1456,11 @@ def main() -> None:
     )
     lines += [
         "",
-        "CC convergence and per-round shuffle, measured on the real "
-        "implementation (iterations = duplicate-cluster diameter, not "
-        "corpus size; the round's single exchange carries label-sized "
-        "partial-agg rows, never edge x label products): "
+        "CC per-round shuffle, measured on the real implementation "
+        "(the round's single exchange carries label-sized partial-agg "
+        "rows, never edge x label products): "
         + "; ".join(
-            f"{docs:,} docs -> {cc_extra[docs]['cc_iterations']} rounds, "
-            f"{cc_extra[docs]['cc_edges']:,} directed edges, "
+            f"{docs:,} docs -> {cc_extra[docs]['cc_edges']:,} directed edges, "
             f"{cc_extra[docs]['cc_round_exchange_records']:,} records in the "
             "round exchange"
             for docs in cc_extra
